@@ -43,10 +43,10 @@ def tokens(c: ColumnOrName) -> Column:
 # the collapsed form on a narrow win (0.25 vs 0.29 s standalone). The
 # r12 driver then measured lang_id_counts SLOWER (0.68x, and not
 # faster at 8 cores), and the r13 same-session interleaved A/B
-# (tools/ab_r13.py, min-of-5, both forms in ONE JVM) confirmed the
-# driver: collapsed vs array is flat at sf0.1 (1.007x) and LOSES at
-# x10 (0.946x — the padded-string construction scales with text
-# bytes). Per VERDICT r12 ask #1 the loser is reverted; lang_id below
+# (BENCH_NOTES "Round 13 OPTIMIZATION round, wave 1", lang_id_counts
+# row; both forms in ONE JVM) confirmed the driver: collapsed vs
+# array is flat at sf0.1 (1.007x) and LOSES at x10 (0.946x — the
+# padded-string construction scales with text bytes). Per VERDICT r12 ask #1 the loser is reverted; lang_id below
 # is again the pre-r12 array/HOF form (the oracle's collapsed-string
 # SQL spelling is unchanged — equivalence of the two formulations
 # stays pinned by tests/test_text_fastpath.py).

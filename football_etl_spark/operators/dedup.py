@@ -34,12 +34,6 @@ from pyspark.sql import functions as F
 from ..functions.text import fingerprint, shingles, shingles_from_tokens, tokens
 from .scale import ensure_min_partitions
 
-# One broadcast of the eval-shingle set per (application, hash-list
-# identity) — see contamination_report. Entries for dead applications
-# are evicted on the next miss.
-_EVAL_BC_CACHE: dict = {}
-
-
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Exact dedup on the content fingerprint, deterministic survivor
     (lowest id). One shuffle on the 128-bit key — uniform by
@@ -518,8 +512,17 @@ def contamination_report(
     at 100 TB the join path shuffles one (id, hash) row per shingle
     (corpus-token-scale I/O), the map-only path shuffles nothing."""
     if eval_hashes is not None:
-        import numpy as np
+        import hashlib
+        import warnings
 
+        import numpy as np
+        from pyspark import Broadcast
+
+        from ..session import session_memo
+
+        # Materialised once, so a one-shot iterable serves every path
+        # and the digest below sees exactly the suite that is probed.
+        ev_sorted = np.sort(np.fromiter((int(h) for h in eval_hashes), dtype=np.int64))
         # The sorted eval-hash array ships as a BROADCAST variable
         # (r13, guide §3/§4.5): the closure-pickled list form re-sent
         # the whole suite inside every task binary and re-built the
@@ -529,36 +532,33 @@ def contamination_report(
         # broadcasts per process across tasks under worker reuse) —
         # at a real suite size (millions of shingles) that is the
         # difference between MBs-per-task and bytes-per-task. The
-        # broadcast is cached per (application, hash-list identity) so
-        # repeated calls over a session-cached suite (the bench's
-        # min-of-N runs) reuse ONE broadcast instead of leaking a copy
-        # per invocation; under Spark Connect (no sparkContext) it
-        # degrades to shipping the array in the UDF closure — the
-        # pre-r13 behavior.
-        ev_bc = None
+        # memo keys it by content: an unchanged suite reuses ONE
+        # broadcast, a changed one (even a list mutated in place)
+        # replaces it and unpersists the old copy. Under Spark Connect
+        # (no sparkContext) the array rides the UDF closure instead —
+        # the pre-r13 behavior.
+        spark = train.sparkSession
         try:
-            sc = train.sparkSession.sparkContext
-            # the cache VALUE pins the keyed list object, so its id()
-            # cannot be recycled by a different list while the entry
-            # lives — the identity key stays sound
-            key = (sc.applicationId, id(eval_hashes))
-            hit = _EVAL_BC_CACHE.get(key)
-            if hit is not None and hit[0] is eval_hashes:
-                ev_bc = hit[1]
-            else:
-                for k in [k for k in _EVAL_BC_CACHE if k[0] != sc.applicationId]:
-                    del _EVAL_BC_CACHE[k]
-                ev_bc = sc.broadcast(
-                    np.asarray(sorted(int(h) for h in eval_hashes), dtype=np.int64)
-                )
-                _EVAL_BC_CACHE[key] = (eval_hashes, ev_bc)
-        except Exception:
-            ev_bc = None  # Connect session — fall back to the closure array
-        ev_arr = (
+            sc = spark.sparkContext
+        except AttributeError:  # Spark Connect: PySparkAttributeError
+            sc = None
+            warnings.warn(
+                "contamination_report: no sparkContext (Spark Connect); "
+                "the eval suite ships in the UDF closure, not a broadcast",
+                stacklevel=2,
+            )
+        ev_bc = (
             None
-            if ev_bc is not None
-            else np.asarray(sorted(int(h) for h in eval_hashes), dtype=np.int64)
+            if sc is None
+            else session_memo(
+                spark,
+                "contamination_eval_broadcast",
+                lambda: sc.broadcast(ev_sorted),
+                token=hashlib.blake2b(ev_sorted.tobytes(), digest_size=16).digest(),
+                release=Broadcast.unpersist,
+            )
         )
+        ev_arr = ev_sorted if ev_bc is None else None
 
         @F.pandas_udf("long")
         def _n_hits(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
@@ -733,9 +733,10 @@ def simhash_signatures(
     # sums, but aggregate codegen's subexpression elimination already
     # evaluates it once, so the extra Project only cost — the r12
     # driver measured the materialized form 0.79x, and the r13
-    # same-session interleaved A/B (tools/ab_r13.py, min-of-5)
-    # confirmed the revert faster at every depth: 0.927x at sf0.1,
-    # 0.909x at x10, 0.950x at x100 (VERDICT r12 ask #1).
+    # same-session interleaved A/B (BENCH_NOTES "Round 13
+    # OPTIMIZATION round, wave 1", simhash_near_dups row) confirmed
+    # the revert faster at every depth: 0.927x at sf0.1, 0.909x at
+    # x10, 0.950x at x100 (VERDICT r12 ask #1).
     h = F.conv(F.substring(F.md5("__tok"), 1, bits // 4), 16, 10).cast("long")
     votes = toks.groupBy(id_col).agg(
         *[

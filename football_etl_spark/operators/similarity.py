@@ -22,10 +22,8 @@ the candidate-generation layer a 100 TB embedding corpus needs before
 the exact re-rank; measured recall@10 = 0.40 on the sf0.001 corpus at
 m=8, k=16, 2 Lloyd iterations (production sizing uses k=256 + more
 iterations + exact re-rank of the ADC candidates). The oracle-gated
-entry is staged as ``pq_adc_ann_topk`` in plans/queries.py — the
-deterministic rounded trajectory is replayed in SQL like
-kmeans_embedding_clusters — held for next-round registration to keep
-this round's driver sample on the registry's stale third.
+entry is ``pq_adc_ann_topk`` in plans/queries.py — the deterministic
+rounded trajectory is replayed in SQL like kmeans_embedding_clusters.
 """
 
 from __future__ import annotations

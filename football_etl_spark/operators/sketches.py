@@ -121,9 +121,8 @@ def cms_merge_and_probe(
     with probability ``confidence`` per probe. Output: (grp, key,
     est_count, n_rows). The oracle-gated bounded-error certificate
     entry (exact side + within-bound verdict, like
-    approx_distinct_error_bound) is staged as
-    ``cms_frequency_error_bound`` in plans/queries.py, held for
-    next-round registration by the driver-sample budget."""
+    approx_distinct_error_bound) is ``cms_frequency_error_bound`` in
+    plans/queries.py."""
     rows = sketches.select(by, "cms", "n_rows").collect()
     jread = spark._jvm.org.apache.spark.util.sketch.CountMinSketch.readFrom
     merged: dict = {}
@@ -236,7 +235,7 @@ def approx_top_keys(
 
     The estimate is EXACT whenever a group's distinct-key count stays
     within ``max_items_tracked`` (all counters fit — nothing is ever
-    evicted) — the condition the staged
+    evicted) — the condition the
     ``approx_topk_exactness_certificate`` entry certifies under the
     oracle gate (tie-invariant facts only); beyond that
     it degrades gracefully like any space-saving summary. At 100 TB

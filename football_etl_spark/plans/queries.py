@@ -53,6 +53,7 @@ from ..operators import (
 )
 from ..operators.scale import ensure_min_partitions
 from ..operators.scale import sum_i64_checked as scale_sum_i64_checked
+from ..session import application_id, session_memo
 
 
 @dataclass(frozen=True)
@@ -79,97 +80,41 @@ class QueryDef:
 REGISTRY: dict[str, QueryDef] = {}
 
 
-# Prepared-plan cache: the analyzed DataFrame each registry query
-# builds for a given (session, sf_dir). Query construction is pure
-# plan declaration (the registry contract: deterministic, lazy), so
-# rebuilding it per invocation only re-pays py4j round-trips plus
-# Catalyst analysis of an identical tree — measured at sf0.1, 3.65s
-# of the 12.6s steady-state headline total, with the big expression
-# trees (simhash 0.94s, minhash 0.37s) dominating. Re-executing a
-# cached DataFrame re-runs optimization + physical planning + the
-# actual job (data is NEVER cached — each run scans parquet afresh);
-# this is the classic prepared-statement cache, per session so a
-# stopped context can't leak plans into its successor.
-_PLAN_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
-def _registering(
-    target: dict[str, QueryDef], name: str, oracle, doc, perf_oracle=None
-):
-    def deco(fn):
-        @functools.wraps(fn)
-        def cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-            app_id = spark.sparkContext.applicationId
-            key = (app_id, sf_dir.rstrip("/"), name)
-            df = _PLAN_CACHE.get(key)
-            if df is None:
-                _evict_dead_sessions(_PLAN_CACHE, app_id)
-                df = _PLAN_CACHE[key] = fn(spark, sf_dir)
-            return df
-
-        target[name] = QueryDef(name, cached, oracle, doc, perf_oracle)
-        return cached
-
-    return deco
-
-
 def query(
     name: str,
     oracle: str | None = None,
     doc: str = "",
     perf_oracle: str | None = None,
 ):
-    return _registering(REGISTRY, name, oracle, doc, perf_oracle)
+    """Register ``fn`` as a registry entry. Its plan is built once per
+    (session, sf_dir) and re-executed from then on — a prepared-
+    statement cache (plans stay lazy; each run scans parquet afresh)
+    that saves re-paying py4j round-trips and Catalyst analysis of an
+    identical tree."""
+
+    def deco(fn):
+        @functools.wraps(fn)
+        def cached(spark: SparkSession, sf_dir: str) -> DataFrame:
+            return session_memo(
+                spark, (sf_dir, "plan", name), lambda: fn(spark, sf_dir)
+            )
+
+        REGISTRY[name] = QueryDef(name, cached, oracle, doc, perf_oracle)
+        return cached
+
+    return deco
 
 
-# Entries proven locally (tests/test_oracle.py runs STAGED through the
-# identical Spark-vs-DuckDB compare as REGISTRY) but deliberately kept
-# out of queries() emission for ONE round: the driver samples exactly
-# the first ~50 names per round, never-sampled entries first, so each
-# new registration displaces a stale entry from the re-certification
-# rotation. Staging lets a round finish rotating the backlog while the
-# next round's entries ride the full local gate; promotion is a
-# one-word change (staged_query -> query).
+# Kept empty: bench.py and the test suites still read it.
 STAGED: dict[str, QueryDef] = {}
 
 
-def staged_query(name: str, oracle: str | None = None, doc: str = ""):
-    return _registering(STAGED, name, oracle, doc)
-
-
-# Per-(session, sf_dir) DataFrame cache: a registry query re-reading a
-# table it already loaded pays file-listing + parquet-footer + analysis
-# again for an identical relation. Caching the analyzed DataFrame (NOT
-# the data — plans stay lazy) shaves the fixed per-query planning floor
-# that dominates sub-second queries at bench scale; on a cluster it is
-# the same win as a shared catalog's resolved-relation cache.
-_TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-# Driver-side control-plane values (collected centroid/query rows —
-# dimension-table-sized by contract) cached per session+sf, same
-# rationale as _TABLE_CACHE: rebuilding a plan should not re-run a
-# Spark job for a ≤8-row table that is already pinned on the driver.
-_CONTROL_CACHE: dict[tuple[str, str, str], object] = {}
-
-
-def _evict_dead_sessions(cache: dict, app_id: str) -> None:
-    """Drop entries pinned to stopped SparkContexts (any key whose
-    applicationId differs from the active session's) so long-lived
-    drivers that stop/recreate sessions don't accumulate dead plans."""
-    for k in [k for k in cache if k[0] != app_id]:
-        del cache[k]
-
-
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # applicationId is unique per SparkContext, so a stopped-and-
-    # recreated session can never be handed another session's plans
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir.rstrip("/"), name)
-    df = _TABLE_CACHE.get(key)
-    if df is None:
-        _evict_dead_sessions(_TABLE_CACHE, app_id)
-        df = _TABLE_CACHE[key] = load_table(spark, sf_dir, name)
-    return df
+    # the analyzed relation, not the data: a re-read skips file
+    # listing, footer reads and analysis
+    return session_memo(
+        spark, (sf_dir, "table", name), lambda: load_table(spark, sf_dir, name)
+    )
 
 
 def _q8_rows(spark: SparkSession, sf_dir: str, embeddings: DataFrame) -> list:
@@ -178,18 +123,16 @@ def _q8_rows(spark: SparkSession, sf_dir: str, embeddings: DataFrame) -> list:
     centroid table and as the driver-built LSH query relation, so
     repeated plan construction for the ANN entries runs zero Spark
     jobs."""
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir.rstrip("/"), "__q8_rows")
-    rows = _CONTROL_CACHE.get(key)
-    if rows is None:
-        _evict_dead_sessions(_CONTROL_CACHE, app_id)
-        rows = _CONTROL_CACHE[key] = [
+    return session_memo(
+        spark,
+        (sf_dir, "__q8_rows"),
+        lambda: [
             (int(r[0]), [float(x) for x in r[1]])
             for r in embeddings.filter(F.col("vec_id") < 8)
             .select("vec_id", "embedding")
             .collect()
-        ]
-    return rows
+        ],
+    )
 
 
 def _graph_shuffle_partitions(spark: SparkSession, sf_dir: str) -> int:
@@ -213,23 +156,22 @@ def _graph_shuffle_partitions(spark: SparkSession, sf_dir: str) -> int:
     overhead at any scale. Cached per (session, sf) — the floor is
     snapshotted at first use, so a later in-session change to
     spark.sql.shuffle.partitions is intentionally ignored."""
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir.rstrip("/"), "graph_parts")
-    n = _CONTROL_CACHE.get(key)
-    if n is None:
+
+    def build() -> int:
         import os
 
         import pyarrow.parquet as pq
 
-        _evict_dead_sessions(_CONTROL_CACHE, app_id)
         floor_parts = int(
             spark.conf.get("spark.sql.shuffle.partitions", "200")
         )
         # local-probe fallback mirrors ensure_min_partitions
-        # (scale.py:42-46): strip the file: scheme, and on any
-        # unreadable path (remote FS, missing table) degrade to the
-        # session floor instead of failing plan construction — the
-        # estimate is an OPTIMIZATION, never a correctness gate.
+        # (scale.py:42-46): strip the file: scheme, and on an
+        # unreadable path (remote FS or missing table: OSError; a
+        # corrupt footer: pyarrow's ArrowInvalid, a ValueError)
+        # degrade to the session floor instead of failing plan
+        # construction — the estimate is an OPTIMIZATION, never a
+        # correctness gate.
         path = os.path.join(sf_dir.removeprefix("file:"), "lineitem.parquet")
         try:
             if os.path.isdir(path):
@@ -240,12 +182,12 @@ def _graph_shuffle_partitions(spark: SparkSession, sf_dir: str) -> int:
                 )
             else:
                 rows = pq.ParquetFile(path).metadata.num_rows
-        except Exception:
+        except (OSError, ValueError):
             rows = 0
         est_edges = 3 * rows
-        n = max(floor_parts, min(4096, -(-est_edges // 500_000)))
-        _CONTROL_CACHE[key] = n
-    return n
+        return max(floor_parts, min(4096, -(-est_edges // 500_000)))
+
+    return session_memo(spark, (sf_dir, "graph_parts"), build)
 
 
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1732,22 +1674,19 @@ def benchmark_decontamination(spark, sf_dir):
     # eval shingle-hash set collected ONCE per (session, sf) — the
     # benchmark suite is dimension-sized by contract (same legitimacy
     # as broadcasting it); the closure-probe path then plans map-only
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir.rstrip("/"), "__eval_shingles")
-    hashes = _CONTROL_CACHE.get(key)
-    if hashes is None:
-        _evict_dead_sessions(_CONTROL_CACHE, app_id)
-        from ..functions.text import shingles as _shingles
-
-        hashes = _CONTROL_CACHE[key] = [
+    hashes = session_memo(
+        spark,
+        (sf_dir, "__eval_shingles"),
+        lambda: [
             r[0]
             for r in ev.select(
-                F.explode(F.array_distinct(_shingles("text", 5))).alias("__s")
+                F.explode(F.array_distinct(text.shingles("text", 5))).alias("__s")
             )
             .select(F.xxhash64("__s").alias("h"))
             .distinct()
             .collect()
-        ]
+        ],
+    )
     return dedup.contamination_report(
         tr, ev, shingle_n=5, min_hits=1, eval_hashes=hashes
     )
@@ -5023,16 +4962,12 @@ def _kmeans_cent(spark: SparkSession, sf_dir: str) -> list:
     training runs two assignment+update passes (Spark jobs) the FIRST
     time a kmeans-family plan is built, then every rebuild reuses the
     K*D-float control plane — same rationale as _q8_rows."""
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir.rstrip("/"), "__kmeans_cent")
-    cent = _CONTROL_CACHE.get(key)
-    if cent is None:
-        _evict_dead_sessions(_CONTROL_CACHE, app_id)
+
+    def build() -> list:
         e = _t(spark, sf_dir, "embeddings")
-        cent = _CONTROL_CACHE[key] = similarity.kmeans_fit(
-            e, _q8_rows(spark, sf_dir, e), n_iter=2
-        )
-    return cent
+        return similarity.kmeans_fit(e, _q8_rows(spark, sf_dir, e), n_iter=2)
+
+    return session_memo(spark, (sf_dir, "__kmeans_cent"), build)
 
 
 # The 2-iteration Lloyd's trajectory as a reusable CTE chain: c2 is
@@ -6778,7 +6713,7 @@ def conversion_funnel(spark, sf_dir):
 )
 def schema_evolution_read(spark, sf_dir):
     # eager-write via the shared scratch-root helper: keyed by
-    # pid + applicationId + sf_dir (two sessions, or two scale
+    # pid + application id + sf_dir (two sessions, or two scale
     # factors in one session, can never overwrite each other's
     # landed layout mid-read), wiped at construction, removed at
     # process exit.
@@ -6809,7 +6744,7 @@ def _fresh_tmp_root(spark: SparkSession, tag: str, sf_dir: str) -> str:
     """Per-(process, session, sf) scratch root for entries with eager
     sink/stream side effects: wiped at construction so streaming
     checkpoints start fresh (a stale checkpoint would skip the
-    rewritten feed), keyed by applicationId so concurrent sessions
+    rewritten feed), keyed by application id so concurrent sessions
     never race on each other's layout, removed at process exit."""
     import atexit
     import os
@@ -6817,7 +6752,7 @@ def _fresh_tmp_root(spark: SparkSession, tag: str, sf_dir: str) -> str:
     import shutil
     import tempfile
 
-    app = spark.sparkContext.applicationId
+    app = application_id(spark)
     sft = re.sub(r"\W+", "_", sf_dir.rstrip("/"))
     root = f"{tempfile.gettempdir()}/fes_{tag}_{os.getpid()}_{app}_{sft}"
     shutil.rmtree(root, ignore_errors=True)
@@ -7274,12 +7209,6 @@ def approx_percentile_error_bound(spark, sf_dir):
     return j.select(*cols)
 
 
-# ===========================================================================
-# STAGED for next-round registration (full local oracle gate, not yet
-# in queries() emission — see staged_query above for the budget math)
-# ===========================================================================
-
-
 @query(
     "q12_priority_shipping",
     oracle="""
@@ -7532,14 +7461,11 @@ _SQL_PQ_CTES = f"""sv AS (
 )
 def pq_adc_ann_topk(spark, sf_dir):
     e = _t(spark, sf_dir, "embeddings")
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir.rstrip("/"), "__pq_books")
-    books = _CONTROL_CACHE.get(key)
-    if books is None:
-        _evict_dead_sessions(_CONTROL_CACHE, app_id)
-        books = _CONTROL_CACHE[key] = similarity.pq_train(
-            e, m=8, k=16, n_iter=2
-        )
+    books = session_memo(
+        spark,
+        (sf_dir, "__pq_books"),
+        lambda: similarity.pq_train(e, m=8, k=16, n_iter=2),
+    )
     codes = similarity.pq_encode(e, books)
     return similarity.pq_adc_topk(
         codes, books, _q8_rows(spark, sf_dir, e), k_top=10
@@ -8293,7 +8219,7 @@ def bucketed_join_revenue(spark, sf_dir):
     # full sf_dir path in the tag (like _fresh_tmp_root): two sf_dirs
     # sharing a basename must not collide on catalog table names
     tag = re.sub(r"\W+", "_", sf_dir.rstrip("/"))
-    app = re.sub(r"\W+", "_", spark.sparkContext.applicationId)
+    app = re.sub(r"\W+", "_", application_id(spark))
     o = (
         _t(spark, sf_dir, "orders")
         .select("o_custkey", "o_totalprice")
@@ -8439,7 +8365,7 @@ def top_orders_with_ties(spark, sf_dir):
 
 
 # ===========================================================================
-# Round-6 staged tier: next-wave candidates under the local oracle gate
+# Round-6 wave
 # ===========================================================================
 
 
@@ -8889,7 +8815,7 @@ def streaming_dedup_within_watermark(spark, sf_dir):
     deduped = incremental.streaming_dedup(
         stream, keys=("event_id",), ts_col="ts", watermark="1 day"
     )
-    name = f"sdw_{spark.sparkContext.applicationId.replace('-', '_')}"
+    name = f"sdw_{application_id(spark).replace('-', '_')}"
     out = incremental.run_available_now(
         deduped, name, f"{root}/ckpt", mode="append"
     )
@@ -8897,7 +8823,7 @@ def streaming_dedup_within_watermark(spark, sf_dir):
 
 
 # ===========================================================================
-# Round-7 staged tier: next-wave candidates under the local oracle gate
+# Round-7 wave
 # ===========================================================================
 
 
@@ -11155,18 +11081,16 @@ def pca_top_component(spark, sf_dir):
     src = e.filter(
         F.col("embedding").isNotNull() & (F.size("embedding") == 64)
     )
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir.rstrip("/"), "pca_gram_rows")
-    rows = _CONTROL_CACHE.get(key)
-    if rows is None:
-        _evict_dead_sessions(_CONTROL_CACHE, app_id)
-        # cache the COLLECTED triangle (the line-150 pattern), not the
-        # lazy DataFrame — a cached lazy plan re-runs the distributed
-        # Gram job on every invocation and the 'paid once per session'
-        # contract is never delivered
-        rows = _CONTROL_CACHE[key] = similarity.gram_matrix(
+    # memo the COLLECTED triangle, not the lazy DataFrame — a memoised
+    # lazy plan re-runs the distributed Gram job on every invocation
+    # and the 'paid once per session' contract is never delivered
+    rows = session_memo(
+        spark,
+        (sf_dir, "pca_gram_rows"),
+        lambda: similarity.gram_matrix(
             src, vec_col="embedding", dim=64, scale=1000
-        ).collect()
+        ).collect(),
+    )
     return similarity.pca_top_component_from_rows(
         spark, rows, dim=64, n_iter=3, round_to=6
     )
@@ -11291,24 +11215,14 @@ def streaming_fanout_two_sinks(spark, sf_dir):
 
 
 # ===========================================================================
-# Round-9 wave: BPE-merge statistics (registry — fills the one rotation
-# slot left after minhash_near_dups_capped; 48 r4-stale + 2 new = the
-# exact 50-entry driver sample) and FOURTEEN staged entries for r10
-# promotion: benford screen, exact-integer CUSUM, Heaps-law vocab
-# growth, dup-cluster size distribution, KL language drift, radix-rank
+# Round-9 wave: BPE-merge statistics and fourteen more entries:
+# benford screen, exact-integer CUSUM, Heaps-law vocab growth,
+# dup-cluster size distribution, KL language drift, radix-rank
 # Lorenz/Gini, log2 length-bucket corpus mass, user-day entropy
 # profile, context-budget truncation, triangle count + degree
 # structure (the co-purchase graph panel), per-source dedup rate,
 # one-pass BRR half-sample stderr, and tokenizer fertility by
 # language — the last ten all dual-green ANSI oracles.
-# PROMOTED in r10 (staged_query -> query): all fourteen entered
-# queries() emission after the round-10 re-plans (graph panel
-# shuffle_hash + degree moments, entropy/BPE acceptance notes, CUSUM
-# decimal guard, integral wedge sums) and a 214/214 local full sweep;
-# with the new bpe_train_merges that makes 15 never-sampled entries.
-# _emission_order surfaces them first, so the r10 driver sample was
-# 15 never-sampled + 35 r5-stale, exactly the rotation planned
-# (tally aligned with BENCH_NOTES r10 per the r10 ADVICE).
 # ===========================================================================
 
 
@@ -11477,42 +11391,39 @@ def _bpe_train(spark, sf_dir, rounds: int = 3) -> list[dict]:
     """Train ``rounds`` BPE merge rules (count -> adopt top pair ->
     greedy corpus-wide apply -> recount); cached per (session, sf) so
     the trainer and the encode entry share one training run."""
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir.rstrip("/"), f"bpe_merge_rules_{rounds}")
-    rules = _CONTROL_CACHE.get(key)
-    if rules is not None:
+
+    def build() -> list[dict]:
+        cur = _bpe_corpus(spark, sf_dir)
+        rules = []
+        for rnd in range(1, rounds + 1):
+            k = F.size("t")
+            bigrams = F.when(
+                k >= 2,
+                F.zip_with(
+                    F.slice(F.col("t"), 1, k - 1),
+                    F.slice(F.col("t"), 2, k - 1),
+                    lambda x, y: F.concat_ws(" ", x, y),
+                ),
+            ).otherwise(F.array().cast("array<string>"))
+            top = (
+                cur.select(F.explode(bigrams).alias("pair"))
+                .groupBy("pair")
+                .agg(F.count(F.lit(1)).cast("long").alias("n"))
+                .orderBy(F.desc("n"), F.asc("pair"))
+                .limit(1)
+                .collect()
+            )
+            if not top:
+                break
+            pair, n = top[0]["pair"], int(top[0]["n"])
+            rules.append({"merge_round": rnd, "pair": pair, "n_occurrences": n})
+            # tokens are whitespace-split (no spaces) and merged tokens
+            # are US-joined, so the first space is exactly the separator
+            w1, w2 = pair.split(" ", 1)
+            cur = cur.select(_bpe_apply_mask(F.col("t"), w1, w2).alias("t"))
         return rules
-    _evict_dead_sessions(_CONTROL_CACHE, app_id)
-    cur = _bpe_corpus(spark, sf_dir)
-    rules = []
-    for rnd in range(1, rounds + 1):
-        k = F.size("t")
-        bigrams = F.when(
-            k >= 2,
-            F.zip_with(
-                F.slice(F.col("t"), 1, k - 1),
-                F.slice(F.col("t"), 2, k - 1),
-                lambda x, y: F.concat_ws(" ", x, y),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-        top = (
-            cur.select(F.explode(bigrams).alias("pair"))
-            .groupBy("pair")
-            .agg(F.count(F.lit(1)).cast("long").alias("n"))
-            .orderBy(F.desc("n"), F.asc("pair"))
-            .limit(1)
-            .collect()
-        )
-        if not top:
-            break
-        pair, n = top[0]["pair"], int(top[0]["n"])
-        rules.append({"merge_round": rnd, "pair": pair, "n_occurrences": n})
-        # tokens are whitespace-split (no spaces) and merged tokens
-        # are US-joined, so the first space is exactly the separator
-        w1, w2 = pair.split(" ", 1)
-        cur = cur.select(_bpe_apply_mask(F.col("t"), w1, w2).alias("t"))
-    _CONTROL_CACHE[key] = rules
-    return rules
+
+    return session_memo(spark, (sf_dir, f"bpe_merge_rules_{rounds}"), build)
 
 
 
@@ -11817,11 +11728,7 @@ def bpe_train_merges(spark, sf_dir):
 def bpe_encode_corpus(spark, sf_dir):
     from ..operators.similarity import _literal_rows_df as _lit_rows
 
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir.rstrip("/"), "bpe_encode_stats")
-    rows = _CONTROL_CACHE.get(key)
-    if rows is None:
-        _evict_dead_sessions(_CONTROL_CACHE, app_id)
+    def build() -> list[dict]:
         rules = _bpe_train(spark, sf_dir)
         cur = _bpe_corpus(spark, sf_dir)
 
@@ -11835,7 +11742,7 @@ def bpe_encode_corpus(spark, sf_dir):
             cur = cur.select(_bpe_apply_mask(F.col("t"), w1, w2).alias("t"))
             totals.append(total(cur))
         base = totals[0]
-        rows = [
+        return [
             {
                 "merge_round": r["merge_round"],
                 "pair": r["pair"],
@@ -11845,7 +11752,8 @@ def bpe_encode_corpus(spark, sf_dir):
             }
             for i, r in enumerate(rules)
         ]
-        _CONTROL_CACHE[key] = rows
+
+    rows = session_memo(spark, (sf_dir, "bpe_encode_stats"), build)
     schema = (
         "merge_round: int, pair: string, n_merges_applied: long, "
         "tokens_after_round: long, compression_vs_raw: double"
@@ -11879,11 +11787,8 @@ def _lm_aug_pair_counts(spark, sf_dir):
     materialization and the scoring stream. The checkpoint (not
     persist — the measured-worse full-corpus persist was rejected in
     r11) holds only the count table."""
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir.rstrip("/"), "bigram_lm_aug_counts")
-    cp = _CONTROL_CACHE.get(key)
-    if cp is None:
-        _evict_dead_sessions(_CONTROL_CACHE, app_id)
+
+    def build() -> DataFrame:
         d = ensure_min_partitions(_t(spark, sf_dir, "documents"))
         t = text.tokens("text")
         n = F.size(t)
@@ -11898,15 +11803,15 @@ def _lm_aug_pair_counts(spark, sf_dir):
                 lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
             ),
         ).otherwise(F.expr("array()").cast("array<struct<w1:string,w2:string>>"))
-        cp = (
+        return (
             d.select(F.explode(pairs).alias("p"))
             .select("p.w1", "p.w2")
             .groupBy("w1", "w2")
             .agg(F.count(F.lit(1)).cast("long").alias("c"))
             .localCheckpoint()
         )
-        _CONTROL_CACHE[key] = cp
-    return cp
+
+    return session_memo(spark, (sf_dir, "bigram_lm_aug_counts"), build)
 
 
 
@@ -12037,11 +11942,8 @@ def _trigram_backoff_counts(spark, sf_dir):
     bigram position appears exactly once regardless of w3), c1 (w1
     rollup — raw token counts), N (Σc1) and V (distinct w1) — the
     bigram entry's augmented-pair trick extended one order."""
-    app_id = spark.sparkContext.applicationId
-    key = (app_id, sf_dir.rstrip("/"), "trigram_backoff_counts")
-    cp = _CONTROL_CACHE.get(key)
-    if cp is None:
-        _evict_dead_sessions(_CONTROL_CACHE, app_id)
+
+    def build() -> DataFrame:
         d = ensure_min_partitions(
             _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 2 == 0)
         )
@@ -12074,15 +11976,15 @@ def _trigram_backoff_counts(spark, sf_dir):
                 "array<struct<w1:string,w2:string,w3:string>>"
             )
         )
-        cp = (
+        return (
             d.select(F.explode(trips).alias("p"))
             .select("p.w1", "p.w2", "p.w3")
             .groupBy("w1", "w2", "w3")
             .agg(F.count(F.lit(1)).cast("long").alias("c"))
             .localCheckpoint()
         )
-        _CONTROL_CACHE[key] = cp
-    return cp
+
+    return session_memo(spark, (sf_dir, "trigram_backoff_counts"), build)
 
 
 @query(
@@ -13020,17 +12922,14 @@ def user_day_entropy_profile(spark, sf_dir):
 
     ev = _t(spark, sf_dir, "events")
     day = F.col("ts").cast("date").alias("d")
-    app_id = spark.sparkContext.applicationId
-    vkey = (app_id, sf_dir.rstrip("/"), "event_type_vocab")
-    vocab = _CONTROL_CACHE.get(vkey)
-    if vocab is None:
-        _evict_dead_sessions(_CONTROL_CACHE, app_id)
-        vocab = [
-            r["event_type"]
-            for r in ev.select("event_type").distinct().collect()
-        ]
-        vocab.sort(key=lambda t: (t is None, t))
-        _CONTROL_CACHE[vkey] = vocab
+    vocab = session_memo(
+        spark,
+        (sf_dir, "event_type_vocab"),
+        lambda: sorted(
+            (r["event_type"] for r in ev.select("event_type").distinct().collect()),
+            key=lambda t: (t is None, t),
+        ),
+    )
     if 0 < len(vocab) <= 32:
         # bounded-domain fast path: per-type counts as conditional
         # sums of ONE (user, day) groupBy. NULL gets its own column —

@@ -16,8 +16,13 @@ The engine pins the handful of configs that its semantics rely on
 from __future__ import annotations
 
 import os
+from collections.abc import Callable, Hashable
+from types import SimpleNamespace
+from typing import TypeVar
 
 from pyspark.sql import SparkSession
+
+T = TypeVar("T")
 
 
 def default_parallelism() -> int:
@@ -25,7 +30,57 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
-_SHIPPED: set[str] = set()
+# The entries session_memo holds: one application's at a time, since a
+# process runs at most one live SparkContext.
+_memo = SimpleNamespace(app=None, entries={})
+
+
+def application_id(spark: SparkSession) -> str:
+    """The id of ``spark``'s application; unique per SparkContext."""
+    return spark.sparkContext.applicationId
+
+
+def session_memo(
+    spark: SparkSession,
+    key: Hashable,
+    build: Callable[[], T],
+    *,
+    token: Hashable = None,
+    release: Callable[[T], object] | None = None,
+) -> T:
+    """``build()``, memoised per application under ``key`` — the one
+    cache of driver-side values the engine keeps (prepared plans,
+    loaded tables, collected control-plane rows, broadcasts, the
+    shipped package).
+
+    - Per application: entries live as long as the SparkContext that
+      built them, so a stopped-and-recreated session never sees its
+      predecessor's plans or broadcasts.
+    - Dead applications evicted: a miss under a new application drops
+      every entry of the old one (its context, and anything it
+      broadcast, is already gone, so nothing is released).
+    - Token supersedes: an entry stored with a different ``token``
+      (e.g. a digest of the content it was built from) is rebuilt.
+    - Release on supersede: the replaced value is passed to
+      ``release`` (e.g. ``Broadcast.unpersist``), so one live value
+      remains per key.
+
+    String parts of a tuple ``key`` drop trailing slashes, so
+    ``sf_dir`` and ``sf_dir + "/"`` share entries. A hit is one dict
+    lookup."""
+    app = application_id(spark)
+    if isinstance(key, tuple):
+        key = tuple(k.rstrip("/") if isinstance(k, str) else k for k in key)
+    if _memo.app != app:
+        _memo.app, _memo.entries = app, {}
+    hit = _memo.entries.get(key)
+    if hit is not None and hit[0] == token:
+        return hit[1]
+    value = build()
+    _memo.entries[key] = (token, value)
+    if hit is not None and release is not None:
+        release(hit[1])
+    return value
 
 
 def ship_package(spark: SparkSession) -> None:
@@ -37,25 +92,25 @@ def ship_package(spark: SparkSession) -> None:
     the worker side; when the driver found the repo via ``sys.path``
     alone (foreign cwd, no PYTHONPATH export — exactly how the
     correctness driver invokes the contract module), workers cannot.
-    Zipping the package once per process and ``addPyFile``-ing it puts
-    the archive on every worker's ``sys.path`` before task
-    deserialization. Cached per applicationId; repeat calls are
-    no-ops. On a real cluster the same archive rides
-    ``--py-files``/``spark.submit.pyFiles`` and this helper is a
-    harmless re-add."""
+    Zipping the package and ``addPyFile``-ing it puts the archive on
+    every worker's ``sys.path`` before task deserialization; it runs
+    once per application (:func:`session_memo`). On a real cluster
+    the same archive rides ``--py-files``/``spark.submit.pyFiles`` and
+    this helper is a harmless re-add."""
+    session_memo(spark, "ship_package", lambda: _ship(spark))
+
+
+def _ship(spark: SparkSession) -> bool:
     import tempfile
     import zipfile
 
-    app = spark.sparkContext.applicationId
-    if app in _SHIPPED:
-        return
     pkg_root = os.path.dirname(os.path.abspath(__file__))
     parent = os.path.dirname(pkg_root)
     zp = os.path.join(tempfile.gettempdir(), f"fes_pkg_{os.getpid()}.zip")
     # Always (re)build: an archive left by a recycled pid or an older
     # checkout must never ship stale code to executors. The build is
     # ~60 small files; os.replace keeps the publish atomic.
-    tmp = f"{zp}.{app}.tmp"
+    tmp = f"{zp}.{application_id(spark)}.tmp"
     with zipfile.ZipFile(tmp, "w") as z:
         for root, _, files in os.walk(pkg_root):
             for f in sorted(files):
@@ -64,7 +119,7 @@ def ship_package(spark: SparkSession) -> None:
                     z.write(full, os.path.relpath(full, parent))
     os.replace(tmp, zp)
     spark.sparkContext.addPyFile(zp)
-    _SHIPPED.add(app)
+    return True
 
 
 def get_spark(

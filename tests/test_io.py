@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from football_etl_spark.io.loader import load_table, read_csv, read_json
@@ -172,12 +173,12 @@ def test_ship_package_zips_sources_and_is_idempotent(spark):
     with the package name (so the archive lands importable on worker
     sys.path), (2) include the Python DataSource module that pickles
     by reference, and (3) be a cheap no-op on repeat calls for the
-    same session (cached per applicationId)."""
+    same session (memoised per application)."""
     import os
     import tempfile
     import zipfile
 
-    from football_etl_spark.session import _SHIPPED, ship_package
+    from football_etl_spark.session import session_memo, ship_package
 
     ship_package(spark)
     zp = os.path.join(tempfile.gettempdir(), f"fes_pkg_{os.getpid()}.zip")
@@ -187,8 +188,7 @@ def test_ship_package_zips_sources_and_is_idempotent(spark):
     assert all(n.startswith("football_etl_spark/") for n in names)
     assert "football_etl_spark/io/dump_source.py" in names
     assert "football_etl_spark/session.py" in names
-    app = spark.sparkContext.applicationId
-    assert app in _SHIPPED
+    assert session_memo(spark, "ship_package", lambda: pytest.fail("no memo entry")) is True
     mtime = os.path.getmtime(zp)
     ship_package(spark)  # cached — must not rebuild the archive
     assert os.path.getmtime(zp) == mtime

@@ -10,7 +10,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from football_etl_spark.operators.joins import snapshot_diff
-from football_etl_spark.plans.queries import REGISTRY, _CONTROL_CACHE
+from football_etl_spark.plans.queries import REGISTRY
+from football_etl_spark.session import session_memo
 
 from .conftest import SF_SMOKE
 
@@ -58,12 +59,9 @@ def test_pca_gram_cache_holds_collected_rows(spark):
     DataFrame that re-runs the Gram job on every invocation. Two
     invocations return identical loadings from the same cached rows."""
     first = REGISTRY["pca_top_component"].fn(spark, SF_SMOKE).collect()
-    key = (
-        spark.sparkContext.applicationId,
-        SF_SMOKE.rstrip("/"),
-        "pca_gram_rows",
+    cached = session_memo(
+        spark, (SF_SMOKE, "pca_gram_rows"), lambda: pytest.fail("no memo entry")
     )
-    cached = _CONTROL_CACHE.get(key)
     assert isinstance(cached, list) and len(cached) == 64 * 65 // 2, type(cached)
     second = REGISTRY["pca_top_component"].fn(spark, SF_SMOKE).collect()
     assert sorted(map(tuple, first)) == sorted(map(tuple, second))

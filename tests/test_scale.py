@@ -235,3 +235,15 @@ def test_grouped_map_width_survives_aqe(spark):
         )
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", old)
+
+
+def test_graph_partition_probe_degrades_to_session_floor(spark, tmp_path):
+    """The footer probe is an optimization: a missing table (OSError)
+    or an unreadable footer (pyarrow's ArrowInvalid, a ValueError)
+    yields the session's shuffle-partition floor, not an error."""
+    from football_etl_spark.plans.queries import _graph_shuffle_partitions
+
+    floor = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert _graph_shuffle_partitions(spark, str(tmp_path / "missing")) == floor
+    (tmp_path / "lineitem.parquet").write_text("not a parquet footer")
+    assert _graph_shuffle_partitions(spark, str(tmp_path)) == floor
