@@ -4,8 +4,11 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException, PySparkAttributeError
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..session import default_parallelism
 
 
 def sum_i64_checked(x, what: str, w=None):
@@ -57,12 +60,20 @@ def ensure_min_partitions(df: DataFrame, min_parts: int | None = None) -> DataFr
     to the per-row CPU work this helper exists to spread.
 
     The smallness check uses file metadata only (no RDD translation,
-    no job): if the source files are few and small, repartition."""
+    no job): if the source files are few and small, repartition.
+    ``min_parts`` defaults to the context's ``defaultParallelism``, or
+    under Spark Connect (no ``sparkContext``) to
+    :func:`session.default_parallelism`."""
     if min_parts is None:
-        min_parts = df.sparkSession.sparkContext.defaultParallelism
+        try:
+            min_parts = df.sparkSession.sparkContext.defaultParallelism
+        except PySparkAttributeError:  # Spark Connect: no sparkContext
+            min_parts = default_parallelism()
     try:
         files = df.inputFiles()
-    except Exception:
+    except AnalysisException:
+        # a streaming relation: inputFiles() plans it as a batch query,
+        # which Spark refuses; other non-file relations return []
         files = []
     if not files:
         # non-file source (literal/derived frames): cheap to repartition

@@ -109,7 +109,12 @@ def lsh_bucket(
     measured SLOWER inside the full top-k query at the same scale
     (1.75s vs 1.14s: the big literal tree is re-analyzed and
     re-evaluated across the join), so it is kept only for UDF-free
-    environments, not auto-selected.
+    environments, not auto-selected. Both figures were measured with
+    stock PySpark workers, whose every task re-read each zip on
+    ``sys.path`` before it started (0.1-0.25 s of CPU, Python <
+    3.13); that per-task cost is part of the "fixed round-trip" above.
+    The engine's local-master worker daemon (``worker_daemon``)
+    removes it, so the break-even row count is lower than stated.
 
     Both paths accumulate in float64; a sign flip between matmul and
     sequential order needs |dot| ≲ 1e-13·‖v‖ — vanishingly rare for

@@ -24,6 +24,8 @@ from pyspark.sql import SparkSession
 
 T = TypeVar("T")
 
+_PKG_ROOT = os.path.dirname(os.path.abspath(__file__))
+
 
 def default_parallelism() -> int:
     """Worker threads for local mode (driver-set via SPARK_GRAFT_CPUS)."""
@@ -104,15 +106,14 @@ def _ship(spark: SparkSession) -> bool:
     import tempfile
     import zipfile
 
-    pkg_root = os.path.dirname(os.path.abspath(__file__))
-    parent = os.path.dirname(pkg_root)
+    parent = os.path.dirname(_PKG_ROOT)
     zp = os.path.join(tempfile.gettempdir(), f"fes_pkg_{os.getpid()}.zip")
     # Always (re)build: an archive left by a recycled pid or an older
     # checkout must never ship stale code to executors. The build is
     # ~60 small files; os.replace keeps the publish atomic.
     tmp = f"{zp}.{application_id(spark)}.tmp"
     with zipfile.ZipFile(tmp, "w") as z:
-        for root, _, files in os.walk(pkg_root):
+        for root, _, files in os.walk(_PKG_ROOT):
             for f in sorted(files):
                 if f.endswith(".py"):
                     full = os.path.join(root, f)
@@ -134,11 +135,26 @@ def get_spark(
     size for local mode; on a real cluster the engine relies on AQE
     coalescing from a larger initial number, so callers pass it
     explicitly there.
+
+    On a local master the Python workers fork from
+    :mod:`football_etl_spark.worker_daemon` rather than
+    ``pyspark.daemon`` (it spares each task a re-read of every zip on
+    the worker's path), with the package's parent directory appended
+    to the workers' ``PYTHONPATH`` so the daemon imports from any cwd.
+    Other masters keep the stock daemon: their executors may not have
+    the package.
     """
     cpus = default_parallelism()
+    master = master or f"local[{cpus}]"
+    conf = dict(extra_conf or {})
+    if master == "local" or master.startswith("local["):
+        conf.setdefault("spark.python.daemon.module", "football_etl_spark.worker_daemon")
+        path = conf.get("spark.executorEnv.PYTHONPATH")
+        parent = os.path.dirname(_PKG_ROOT)
+        conf["spark.executorEnv.PYTHONPATH"] = f"{path}{os.pathsep}{parent}" if path else parent
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
+        .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -149,7 +165,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

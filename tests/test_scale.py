@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from football_etl_spark.io.loader import load_table
 from football_etl_spark.io.sinks import write_bucketed
-from football_etl_spark.operators.scale import salted_join
+from football_etl_spark.operators.scale import ensure_min_partitions, salted_join
 
 from .conftest import SF_SMOKE
 from .test_plans import plan_str
@@ -247,3 +247,12 @@ def test_graph_partition_probe_degrades_to_session_floor(spark, tmp_path):
     assert _graph_shuffle_partitions(spark, str(tmp_path / "missing")) == floor
     (tmp_path / "lineitem.parquet").write_text("not a parquet footer")
     assert _graph_shuffle_partitions(spark, str(tmp_path)) == floor
+
+
+def test_ensure_min_partitions_repartitions_a_stream(spark):
+    """A streaming relation has no input files to probe (``inputFiles``
+    refuses to plan it as a batch query); like any non-file source it
+    is repartitioned, and it stays a stream."""
+    out = ensure_min_partitions(spark.readStream.format("rate").load(), 3)
+    assert out.isStreaming
+    assert "RoundRobinPartitioning(3)" in plan_str(out, "simple")

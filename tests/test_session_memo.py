@@ -173,7 +173,8 @@ class _NoContextSession:
 def test_contamination_closure_fallback_without_spark_context(spark, monkeypatch):
     """Without a sparkContext the suite ships in the UDF closure,
     with a warning, and the counts stay exact — a generator suite
-    included (it is consumed once)."""
+    included (it is consumed once). ``ensure_min_partitions`` runs
+    unpatched, on its own Connect fallback."""
     train = _train(spark)
     ev = _docs(spark, [(99, "a b c d e")])
     suite = _suite(ev)
@@ -181,9 +182,6 @@ def test_contamination_closure_fallback_without_spark_context(spark, monkeypatch
         m.setattr(
             type(train), "sparkSession", property(lambda df: _NoContextSession(df._session))
         )
-        # ensure_min_partitions reads sparkContext itself; only the
-        # eval-suite path is under test here
-        m.setattr(dedup, "ensure_min_partitions", lambda df: df)
         with pytest.warns(UserWarning, match="UDF closure"):
             out = dedup.contamination_report(train, ev, eval_hashes=(h for h in suite))
     assert _hits(out) == {1: 1, 2: 0, 3: 1}
