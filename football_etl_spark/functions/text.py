@@ -54,12 +54,6 @@ def token_count(c: ColumnOrName) -> Column:
     return F.size(tokens(c))
 
 
-def bpe_ish_token_count(c: ColumnOrName) -> Column:
-    """A BPE-ish token estimate: count word-piece boundaries — runs of
-    letters, digits, or single punctuation — via regexp_count."""
-    return F.regexp_count(_col(c), F.lit(r"[A-Za-z]+|[0-9]+|[^\sA-Za-z0-9]"))
-
-
 def punct_count(c: ColumnOrName) -> Column:
     # translate (plain char map) instead of the regexp_replace
     # character-class delete — identical count of {.,!?;:} chars.

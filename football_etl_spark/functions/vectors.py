@@ -38,14 +38,6 @@ def cosine(a: ColumnOrName, b: ColumnOrName) -> Column:
     return F.when(d > 0, dot(a, b) / d).otherwise(F.lit(0.0))
 
 
-def l2_distance(a: ColumnOrName, b: ColumnOrName) -> Column:
-    diffs = F.zip_with(
-        _col(a), _col(b),
-        lambda x, y: (x.cast("double") - y.cast("double")) * (x.cast("double") - y.cast("double")),
-    )
-    return F.sqrt(F.aggregate(diffs, F.lit(0.0), lambda acc, x: acc + x))
-
-
 def l2_normalize(a: ColumnOrName) -> Column:
     """Unit-normalize an embedding (array<double> out); zero vectors
     pass through unchanged (no division by zero). Upstream of cosine

@@ -24,14 +24,6 @@ def value_counts(df: DataFrame, col: str, desc: bool = True, limit: int | None =
     return out.limit(limit) if limit else out
 
 
-def null_counts(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
-    """Per-column null counts in one pass (utils/data_utils.py:222-226)."""
-    cols = cols or df.columns
-    return df.agg(
-        *[F.sum(F.col(c).isNull().cast("long")).alias(c) for c in cols]
-    )
-
-
 def completion_ratio(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
     """Whole-table data-completion % — mean of per-column non-null
     densities (pipeline.py:108, processors/data_processor.py:383)."""
@@ -43,20 +35,6 @@ def completion_ratio(df: DataFrame, cols: Sequence[str] | None = None) -> DataFr
     return df.agg((total / F.lit(len(cols))).alias("completion"))
 
 
-def duplicate_count(df: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """#rows − #distinct keys (processors/data_processor.py:102)."""
-    return df.agg(
-        (F.count("*") - F.count_distinct(*[F.col(k) for k in keys])).alias("n_duplicates")
-    )
-
-
-def duplicate_keys(df: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """The offending key values (utils/data_utils.py:229-233)."""
-    return (
-        df.groupBy(*keys).agg(F.count("*").alias("n")).filter(F.col("n") > 1)
-    )
-
-
 def distinct_union(df: DataFrame, col_a: str, col_b: str, out: str) -> DataFrame:
     """Distinct values of two columns united — all teams = home ∪ away
     (scrapers/team_scraper.py:938-940)."""
@@ -65,22 +43,6 @@ def distinct_union(df: DataFrame, col_a: str, col_b: str, out: str) -> DataFrame
         .unionByName(df.select(F.col(col_b).alias(out)))
         .distinct()
     )
-
-
-def pivot_matrix(
-    df: DataFrame,
-    row_key: str,
-    pivot_col: str,
-    agg_col: str,
-    values: Sequence[str] | None = None,
-    agg: str = "avg",
-) -> DataFrame:
-    """Cross-tab (examples/visualize_data.py:285-290). At scale the
-    pivot value list must be bounded — pass ``values`` explicitly to
-    skip the distinct-collection job and cap output width."""
-    g = df.groupBy(row_key)
-    p = g.pivot(pivot_col, list(values)) if values else g.pivot(pivot_col)
-    return p.agg(getattr(F, agg)(agg_col))
 
 
 def table_stats(df: DataFrame, key_cols: Sequence[str], distinct_cols: Sequence[str]) -> Row:

@@ -78,14 +78,6 @@ def coerce_numerics(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     return df.withColumns({c: clean_number(c) for c in cols if c in df.columns})
 
 
-def dedup_keep_first(df: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """Faithful variant of the reference's drop_duplicates
-    (processors/data_processor.py:101-106): survivor is arbitrary
-    (Spark dropDuplicates), cheapest plan — fine when rows are true
-    duplicates."""
-    return df.dropDuplicates(list(keys))
-
-
 def dedup_deterministic(
     df: DataFrame, keys: Sequence[str], order_by: Sequence[Column | str]
 ) -> DataFrame:

@@ -31,7 +31,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.text import fingerprint, shingles, shingles_from_tokens, tokens
+from ..functions.text import fingerprint, shingles_from_tokens, tokens
 from .scale import ensure_min_partitions
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -90,31 +90,6 @@ def minhash_signatures(
         a, b = minhash_params(k)
         aggs.append(F.min((F.col("__h") * a + b) % MINHASH_P).alias(f"mh{k}"))
     return sh.groupBy(id_col).agg(*aggs)
-
-
-def lsh_candidate_pairs(
-    signatures: DataFrame,
-    id_col: str = "doc_id",
-    num_hashes: int = 16,
-    bands: int = 4,
-) -> DataFrame:
-    """LSH banding: split the signature into ``bands`` bands of
-    ``num_hashes/bands`` rows, bucket-key each band, and emit
-    candidate pairs that collide in ≥1 band. Equi-join on
-    (band, key) — the scalable alternative to all-pairs.
-
-    The band keys materialize via ONE posexplode over a per-row array
-    (a union of per-band projections would recompute the upstream
-    signature aggregation once per band)."""
-    buckets = _banded(signatures, id_col, num_hashes, bands).select(id_col, "band", "bkey")
-    a = buckets.select(F.col(id_col).alias("id_a"), "band", "bkey")
-    b_ = buckets.select(F.col(id_col).alias("id_b"), "band", "bkey")
-    return (
-        a.join(b_, ["band", "bkey"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
 
 
 def _banded(signatures: DataFrame, id_col: str, num_hashes: int, bands: int) -> DataFrame:
@@ -752,21 +727,6 @@ def simhash_signatures(
             F.lit(0).cast("long")
         )
     return votes.select(id_col, sig.alias("simhash"))
-
-
-def simhash(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bits: int = 56,
-    out_col: str = "simhash",
-) -> DataFrame:
-    """Column-append convenience over ``simhash_signatures`` (joins the
-    signature back on the id; empty docs get null)."""
-    sigs = simhash_signatures(df, id_col, text_col, bits).withColumnRenamed(
-        "simhash", out_col
-    )
-    return df.join(sigs, id_col, "left")
 
 
 def simhash_near_dup_pairs(

@@ -257,10 +257,6 @@ def anti_join(left: DataFrame, right: DataFrame, on: Sequence[str] | Column) -> 
     return left.join(right, on, "left_anti")
 
 
-def semi_join(left: DataFrame, right: DataFrame, on: Sequence[str] | Column) -> DataFrame:
-    return left.join(right, on, "left_semi")
-
-
 def theta_contains_join(
     df: DataFrame, patterns: DataFrame, col: str, pattern_col: str, broadcast_patterns: bool = True
 ) -> DataFrame:

@@ -15,14 +15,13 @@ sample/pixel planes with nothing but the stdlib, and
 the whole encode→decode loop is exercised on real bytes in three
 independent container layouts without any media library. Payloads in
 formats that DO need an external codec (JPEG/MP3/MP4 …) fall back to
-a clearly documented deterministic digest stub — swap ``decoder=``
-for PIL/torchaudio/pyav in production; the Arrow plumbing is
-identical.
+a clearly documented deterministic digest stub — production swaps
+the closure-local decoder for PIL/torchaudio/pyav; the Arrow plumbing
+is identical.
 """
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
 
 import pandas as pd
@@ -208,56 +207,7 @@ def render_bmp_payload(df: DataFrame, id_col: str, source_col: str) -> DataFrame
     )
 
 
-def _decode_payload(payload: bytes) -> tuple[int, int, int, list[float]]:
-    """Default decoder. Binary PGM ("P5") and 8-bit grayscale BMP
-    ("BM") payloads are decoded for REAL — stdlib header parse +
-    pixel plane: width/height from the header, n_frames = 1 + px[0]
-    mod 8 (treating the ramp phase as a frame-count surrogate),
-    features = first 8 pixels / 255. Other formats fall back to a
-    deterministic digest stub (no media codecs in this container);
-    raises on None like a real decoder would on corrupt input."""
-    if payload is None:
-        raise NotImplementedError("corrupt/absent payload — real decoder required")
-    b = bytes(payload)
-    if b[:2] == b"BM":
-        import struct
-
-        if len(b) < 54:
-            raise NotImplementedError("truncated BMP header")
-        offset = struct.unpack_from("<I", b, 10)[0]
-        width = struct.unpack_from("<i", b, 18)[0]
-        height = struct.unpack_from("<i", b, 22)[0]
-        bpp = struct.unpack_from("<H", b, 28)[0]
-        px = b[offset:]
-        # stride == width requires width % 4 == 0 (our renderer
-        # guarantees it); other variants need row-padding logic
-        if bpp != 8 or width <= 0 or width % 4 or len(px) != width * height:
-            raise NotImplementedError("unsupported BMP variant")
-        n_frames = 1 + px[0] % 8
-        features = [x / 255.0 for x in px[:8]]
-        return width, height, n_frames, features
-    if b[:2] == b"P5":
-        import re
-
-        m = re.match(rb"^P5[ \t\r\n]+(\d+)[ \t\r\n]+(\d+)[ \t\r\n]+(\d+)[ \t\r\n]", b)
-        if not m:
-            raise NotImplementedError("malformed PGM header")
-        width, height, maxval = int(m.group(1)), int(m.group(2)), int(m.group(3))
-        px = b[m.end():]
-        if maxval != 255 or len(px) != width * height:
-            raise NotImplementedError("unsupported PGM variant")
-        n_frames = 1 + px[0] % 8
-        features = [x / 255.0 for x in px[:8]]
-        return width, height, n_frames, features
-    digest = hashlib.md5(b).digest()
-    width = 16 + digest[0] % 240
-    height = 16 + digest[1] % 240
-    n_frames = 1 + digest[2] % 8
-    features = [x / 255.0 for x in digest[:8]]
-    return width, height, n_frames, features
-
-
-def decode_media(df: DataFrame, batch_size_hint: int = 256, decoder=None) -> DataFrame:
+def decode_media(df: DataFrame) -> DataFrame:
     """Decode / feature-extract via Arrow-batched mapInPandas.
 
     Scale notes: blobs stay inside executor batches (never on the
@@ -265,12 +215,15 @@ def decode_media(df: DataFrame, batch_size_hint: int = 256, decoder=None) -> Dat
     batch memory for large payloads. Corrupt rows surface as nulls,
     not task failures.
 
-    ``decoder`` overrides the built-in stub (same signature as
-    ``_decode_payload``); it must be cloudpickle-serializable. The
-    default path keeps the worker closure fully self-contained — no
-    reference to this package — so it runs on executors that don't
-    have the package on their PYTHONPATH (the driver-contract case:
-    plain SparkSession, arbitrary cwd)."""
+    Binary PGM ("P5") and 8-bit grayscale BMP ("BM") payloads are
+    decoded for REAL — stdlib header parse + pixel plane: width/height
+    from the header, n_frames = 1 + px[0] mod 8 (the ramp phase as a
+    frame-count surrogate), features = first 8 pixels / 255. Other
+    formats fall back to a deterministic digest stub (no media codecs
+    here). The worker closure is fully self-contained — no reference
+    to this package — so it runs on executors that don't have the
+    package on their PYTHONPATH (the driver-contract case: plain
+    SparkSession, arbitrary cwd)."""
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import hashlib as _hl
@@ -278,9 +231,7 @@ def decode_media(df: DataFrame, batch_size_hint: int = 256, decoder=None) -> Dat
 
         import pandas as _pd
 
-        def default_decode(payload):
-            # mirror of _decode_payload, kept closure-local so the UDF
-            # needs no package import on executors (driver-contract case)
+        def decode(payload):
             if payload is None:
                 raise NotImplementedError("corrupt/absent payload — real decoder required")
             b = bytes(payload)
@@ -316,7 +267,6 @@ def decode_media(df: DataFrame, batch_size_hint: int = 256, decoder=None) -> Dat
                 [x / 255.0 for x in digest[:8]],
             )
 
-        decode = decoder if decoder is not None else default_decode
         for pdf in batches:
             out = {"media_id": [], "width": [], "height": [], "n_frames": [], "features": []}
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
@@ -447,7 +397,7 @@ def render_y4m_payload(df: DataFrame, id_col: str, source_col: str) -> DataFrame
     )
 
 
-def decode_video(df: DataFrame, batch_size_hint: int = 256) -> DataFrame:
+def decode_video(df: DataFrame) -> DataFrame:
     """REAL Y4M decode via Arrow-batched mapInPandas: parse the
     stream header (token walk — a correct parser survives extra
     parameters and any token order), then walk the FRAME markers,
@@ -569,7 +519,7 @@ assert len(_RAMP_HEX) >= (_MAX_SEED + 3 * _MAX_W * _MAX_H) * 2, (
 )
 
 
-def decode_color_image(df: DataFrame, batch_size_hint: int = 256) -> DataFrame:
+def decode_color_image(df: DataFrame) -> DataFrame:
     """REAL P6/PPM decode via Arrow-batched mapInPandas: parse the
     NetPBM header, DE-INTERLEAVE the RGB triplets, and emit
     integer-exact per-channel facts (sum of each channel's first 8
@@ -674,7 +624,7 @@ def render_wav_payload(
     )
 
 
-def decode_audio(df: DataFrame, batch_size_hint: int = 256) -> DataFrame:
+def decode_audio(df: DataFrame) -> DataFrame:
     """REAL WAV decode via Arrow-batched mapInPandas: walk the RIFF
     chunk list (not fixed offsets — a correct parser survives extra
     chunks), read the PCM format fields, then compute integer-exact

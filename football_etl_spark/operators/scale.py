@@ -41,6 +41,17 @@ def sum_i64_checked(x, what: str, w=None):
         ).cast("long"),
     )
 
+
+def session_parallelism(spark) -> int:
+    """``spark``'s default task parallelism: the context's
+    ``defaultParallelism``, or under Spark Connect (no
+    ``sparkContext``) :func:`session.default_parallelism`."""
+    try:
+        return spark.sparkContext.defaultParallelism
+    except PySparkAttributeError:  # Spark Connect: no sparkContext
+        return default_parallelism()
+
+
 # Inputs bigger than this are already split into plenty of scan tasks
 # by spark.sql.files.maxPartitionBytes; only compact inputs need help.
 _SMALL_INPUT_BYTES = 256 * 1024 * 1024
@@ -61,14 +72,9 @@ def ensure_min_partitions(df: DataFrame, min_parts: int | None = None) -> DataFr
 
     The smallness check uses file metadata only (no RDD translation,
     no job): if the source files are few and small, repartition.
-    ``min_parts`` defaults to the context's ``defaultParallelism``, or
-    under Spark Connect (no ``sparkContext``) to
-    :func:`session.default_parallelism`."""
+    ``min_parts`` defaults to :func:`session_parallelism`."""
     if min_parts is None:
-        try:
-            min_parts = df.sparkSession.sparkContext.defaultParallelism
-        except PySparkAttributeError:  # Spark Connect: no sparkContext
-            min_parts = default_parallelism()
+        min_parts = session_parallelism(df.sparkSession)
     try:
         files = df.inputFiles()
     except AnalysisException:

@@ -438,363 +438,112 @@ def embedding_near_dup_pairs(
     )
 
 
-def default_centroids(
-    corpus: DataFrame, n_centroids: int = 8, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
-    """Deterministic coarse quantizer for IVF: the first ``n_centroids``
-    corpus vectors by id. Production swaps this for Spark ML KMeans
-    cluster centers — the IVF plumbing below is agnostic to where the
-    centroid table comes from."""
-    return corpus.filter(F.col(id_col) < n_centroids).select(
-        F.col(id_col).alias("cid"), F.col(vec_col).alias("cv")
-    )
-
-
-def _centroid_order(vec_col: str, cent_rows: list[tuple[int, list[float]]]) -> Column:
-    """Ranked centroid list as ONE whole-stage-codegen expression: for
-    each (cid, centroid) in the collected (≤n_centroids-row, dimension-
-    table-sized) centroid list, squared-L2 distance via zip_with +
-    aggregate against the literal vector, then array_sort over
-    (distance, cid) structs — lexicographic struct order gives the
-    deterministic ties-to-lower-cid break for free.
-
-    This keeps coarse quantization entirely JVM-side: no Python worker,
-    no Arrow round-trip, no crossJoin-vs-centroids rank window. K·D
-    fused multiply-adds per row inside codegen — for the dimension-
-    table-sized K where IVF lives (K ≤ a few dozen coarse cells per
-    probe level) that is strictly cheaper than shipping every vector
-    to a Python worker twice."""
-    entries = []
-    for cid, cv in cent_rows:
-        lit_v = F.array(*[F.lit(float(x)) for x in cv])
-        d2 = F.aggregate(
-            F.zip_with(F.col(vec_col), lit_v, lambda a, b: (a.cast("double") - b) ** 2),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        entries.append(F.struct(d2.alias("d"), F.lit(int(cid)).alias("cid")))
-    return F.array_sort(F.array(*entries))
-
-
 def ivf_topk(
     corpus: DataFrame,
-    queries: DataFrame,
+    query_rows: list,
+    centroids: list,
     k: int = 10,
     n_probe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    centroids: DataFrame | list | None = None,
-    n_centroids: int = 8,
     exclude_self: bool = True,
-    use_arrow: bool = True,
-    probe_arrow: bool | None = None,
-    probe_strategy: str | None = None,
-    query_rows: list | None = None,
 ) -> DataFrame:
     """IVF (inverted-file) ANN: every corpus vector is assigned to its
-    nearest centroid cell (one broadcast pass — the centroid table is
-    tiny), each query probes its ``n_probe`` nearest cells, and only
-    vectors in probed cells are exactly re-ranked. The classic
-    coarse-quantization alternative to ``lsh_topk``: recall is tuned by
-    ``n_probe`` instead of plane count, and cell assignment can reuse
-    trained centroids.
+    nearest centroid cell, each query probes its ``n_probe`` nearest
+    cells, and only corpus vectors in a probed cell are scored. The
+    classic coarse-quantization alternative to ``lsh_topk``: recall is
+    tuned by ``n_probe`` instead of plane count, and the centroid
+    table is pluggable (the query vectors themselves, or trained
+    ``kmeans_fit`` centers).
 
-    At 100 TB the assignment is embarrassingly parallel (broadcast
-    nested-loop against a ≤k-row centroid table), the cell id becomes
-    the partition/bucket key for the corpus layout, and the probe join
-    is an equi-join on cid — never an all-pairs scan.
+    ``query_rows`` and ``centroids`` are collected ``(id, vector)``
+    rows: both are dimension-table-sized control planes the caller
+    already holds on the driver, so building the plan runs no Spark
+    job. The query probe cells are computed once on the driver; cell
+    assignment, probing and cosine scoring then run as ONE Arrow
+    kernel per corpus batch — the Faiss scan shape (query block and
+    centroids in the closure, one matmul per batch, emit only the
+    probed (query, cosine) hits) — so the plan is map → explode →
+    top-k window with no join and no per-pair interpreted math. This
+    fused scan measured 0.5 s end-to-end at sf0.1 (5000x64, K=8,
+    |Q|=8), against 1.01 s with driver-side probing plus a probe join
+    and 1.28 s with Arrow assignment and probe stages. Driver work is
+    O(|Q|*K*D) and the closure O(|Q|*D) bytes: keep |Q| at
+    broadcast-table size.
 
-    Ties in centroid distance break by centroid id; candidate ranking
-    ties break by neighbor id — fully deterministic.
+    Ties in centroid distance break toward the lower cid; candidate
+    ranking ties break by neighbor id — fully deterministic."""
+    cv_list = [v for _, v in sorted((int(c), [float(x) for x in v]) for c, v in centroids)]
+    q_ids = [int(r[0]) for r in query_rows]
+    q_vecs = [[float(x) for x in r[1]] for r in query_rows]
+    if q_vecs:
+        Qm = np.asarray(q_vecs, dtype=np.float64)
+        Cm = np.asarray(cv_list, dtype=np.float64)
+        qd2 = ((Qm[:, None, :] - Cm[None, :, :]) ** 2).sum(axis=2)
+        # stable argsort over cid-sorted centroids: distance ties break
+        # toward the lower cid
+        q_order = np.argsort(qd2, axis=1, kind="stable")[:, : int(n_probe)]
+        # probe_mask_list[cell_index][query_index] = query probes that cell
+        mask = np.zeros((len(cv_list), len(q_vecs)), dtype=bool)
+        mask[q_order, np.arange(len(q_vecs))[:, None]] = True
+        probe_mask_list = mask.tolist()
+    else:
+        probe_mask_list = [[] for _ in cv_list]
 
-    Every strategy materializes the centroid table on the driver —
-    legitimate for the same reason broadcast is: it is a
-    ≤n_centroids-row dimension table (KMeans centers live on the
-    driver anyway). The default (``use_arrow=True``) assigns corpus
-    cells with one Arrow-batched float64 distance matrix per batch
-    (N×K×D, the Faiss-style vectorized kernel). The expression
-    alternative (``use_arrow=False``, see ``_centroid_order``) keeps
-    Python out of the plan entirely, but Catalyst does NOT
-    whole-stage-codegen higher-order-function lambdas, so its K·D
-    interpreted ops per row plus the K·D-sized expression tree's
-    analysis cost lose to the matmul in practice — measured at
-    sf0.1 (5000×64, K=8): arrow 1.24s vs expression 2.34s end-to-end.
-    It remains the right choice only for UDF-free environments.
+    @F.pandas_udf("array<struct<query_id: long, cosine_sim: double>>")
+    def _fused_hits(v):
+        import numpy as np
+        import pandas as pd
 
-    ``probe_arrow`` controls the QUERY side independently (default:
-    follow ``use_arrow``); the sides scale differently — corpus
-    assignment is always N-big, the query set is often
-    dimension-table-sized where an Arrow stage's fixed Python-worker
-    round-trip costs more than it saves.
-
-    ``probe_strategy`` supersedes ``probe_arrow`` when set:
-    ``'arrow'`` / ``'expr'`` are the two distributed paths above;
-    ``'driver'`` collects the query vectors and computes their probe
-    cells in one local numpy pass — the right call when the query set
-    is dimension-table-sized (it already broadcasts to every executor
-    anyway, so driver-materializing it adds nothing new): it removes
-    both the probe-side Python worker stage AND the ``'expr'`` path's
-    K*D-sized expression tree, whose per-run ANALYSIS cost exceeds
-    the 8-row compute it replaces. ``'fused'`` goes one step further:
-    assignment, probing and scoring collapse into ONE Arrow kernel —
-    the Faiss scan shape (broadcast the query block + centroids in
-    the closure, one matmul per corpus batch, emit only the probed
-    (query, cosine) hits) — so the plan is map → explode → top-k
-    window with no join and no per-pair interpreted HOF math. The
-    kernel still scores ONLY pairs whose cell is probed (mask from
-    the precomputed probe table), preserving IVF's compute saving.
-    Measured at sf0.1 (5000x64, K=8, |Q|=8): arrow+arrow 1.28s,
-    driver 1.01s, fused 0.5s end-to-end. Both non-distributed-query
-    paths scale as O(|Q|*K*D) driver work + O(|Q|*D) closure bytes —
-    cap |Q| at broadcast-table size, else stay with ``'arrow'``.
-    ``query_rows`` optionally supplies the precollected (id, vector)
-    rows for the 'driver'/'fused' paths so repeated plan construction
-    runs zero Spark jobs."""
-    if centroids is None:
-        centroids = default_centroids(corpus, n_centroids, id_col, vec_col)
+        if len(v) == 0:
+            return pd.Series([], dtype=object)
+        Q = np.asarray(q_vecs, dtype=np.float64)
+        qids = np.asarray(q_ids, dtype=np.int64)
+        qn = np.sqrt((Q * Q).sum(axis=1)) if len(Q) else np.zeros(0)
+        C = np.asarray(cv_list, dtype=np.float64)
+        mask = np.asarray(probe_mask_list, dtype=bool)
+        M = np.stack(v.to_numpy()).astype(np.float64)
+        d2 = ((M[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
+        cell_idx = np.argmin(d2, axis=1)
+        cn = np.sqrt((M * M).sum(axis=1))
+        if len(Q) == 0:
+            return pd.Series([[] for _ in range(len(M))])
+        dots = M @ Q.T  # (N, |Q|)
+        denom = cn[:, None] * qn[None, :]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            cos = np.where(denom > 0, dots / denom, 0.0)
+        allowed = mask[cell_idx]  # (N, |Q|)
+        out = []
+        for i in range(len(M)):
+            js = np.nonzero(allowed[i])[0]
+            out.append(
+                [
+                    {"query_id": int(qids[j]), "cosine_sim": float(cos[i, j])}
+                    for j in js
+                ]
+            )
+        return pd.Series(out)
 
     corp = ensure_min_partitions(corpus.select(id_col, vec_col)).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cvec"),
-        norm(vec_col).alias("__cn"),
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cvec")
     )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
-        norm(vec_col).alias("__qn"),
-    )
-
-    if probe_strategy is None:
-        if probe_arrow is None:
-            probe_arrow = use_arrow
-        probe_strategy = "arrow" if probe_arrow else "expr"
-
-    # ``centroids`` may be a DataFrame (collected here — one tiny job)
-    # or a precollected [(cid, vector), ...] list: the control plane is
-    # a dimension table that often already lives on the driver (KMeans
-    # centers, a cached plan's earlier collect), and re-running a
-    # Spark job per plan CONSTRUCTION is pure overhead for callers
-    # that build this plan repeatedly.
-    if isinstance(centroids, DataFrame):
-        cent_rows = sorted(
-            centroids.select("cid", "cv").collect(), key=lambda r: r["cid"]
-        )
-        cent_pairs = [(int(r["cid"]), [float(x) for x in r["cv"]]) for r in cent_rows]
-    else:
-        cent_pairs = sorted((int(c), [float(x) for x in v]) for c, v in centroids)
-    cid_list = [c for c, _ in cent_pairs]
-    cv_list = [v for _, v in cent_pairs]
-    cent_list = cent_pairs
-    probe_n = int(n_probe)
-
-    if use_arrow:
-
-        @F.pandas_udf("long")
-        def _nearest_cell(v):
-            import numpy as np
-            import pandas as pd
-
-            if len(v) == 0:
-                return pd.Series([], dtype="int64")
-            C = np.asarray(cv_list, dtype=np.float64)
-            ids = np.asarray(cid_list, dtype=np.int64)
-            M = np.stack(v.to_numpy()).astype(np.float64)
-            d2 = ((M[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-            # argmin returns the FIRST minimum; centroids are sorted by
-            # cid, so distance ties break toward the lower cid
-            return pd.Series(ids[np.argmin(d2, axis=1)])
-
-        assigned = corp.withColumn("cid", _nearest_cell("__cvec")).select(
-            "neighbor_id", "__cvec", "__cn", "cid"
-        )
-    else:
-        assigned = corp.select(
-            "neighbor_id", "__cvec", "__cn",
-            _centroid_order("__cvec", cent_list)[0]["cid"].alias("cid"),
-        )
-
-    if probe_strategy == "fused":
-        q_rows = (
-            query_rows
-            if query_rows is not None
-            else queries.select(id_col, vec_col).collect()
-        )
-        q_ids = [int(r[0]) for r in q_rows]
-        q_vecs = [[float(x) for x in r[1]] for r in q_rows]
-        cidx_of = {c: i for i, c in enumerate(cid_list)}
-
-        if q_rows:
-            Qm = np.asarray(q_vecs, dtype=np.float64)
-            Cm = np.asarray(cv_list, dtype=np.float64)
-            qd2 = ((Qm[:, None, :] - Cm[None, :, :]) ** 2).sum(axis=2)
-            q_order = np.argsort(qd2, axis=1, kind="stable")[:, :probe_n]
-            # probe_mask[cell_index, query_index] = query probes that cell
-            probe_mask_list = [
-                [bool(cidx in q_order[j]) for j in range(len(q_rows))]
-                for cidx in range(len(cid_list))
-            ]
-        else:
-            probe_mask_list = [[] for _ in cid_list]
-
-        @F.pandas_udf("array<struct<query_id: long, cosine_sim: double>>")
-        def _fused_hits(v):
-            import numpy as np
-            import pandas as pd
-
-            if len(v) == 0:
-                return pd.Series([], dtype=object)
-            Q = np.asarray(q_vecs, dtype=np.float64)
-            qids = np.asarray(q_ids, dtype=np.int64)
-            qn = np.sqrt((Q * Q).sum(axis=1)) if len(Q) else np.zeros(0)
-            C = np.asarray(cv_list, dtype=np.float64)
-            mask = np.asarray(probe_mask_list, dtype=bool)
-            M = np.stack(v.to_numpy()).astype(np.float64)
-            d2 = ((M[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-            cell_idx = np.argmin(d2, axis=1)
-            cn = np.sqrt((M * M).sum(axis=1))
-            if len(Q) == 0:
-                return pd.Series([[] for _ in range(len(M))])
-            dots = M @ Q.T  # (N, |Q|)
-            denom = cn[:, None] * qn[None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = np.where(denom > 0, dots / denom, 0.0)
-            allowed = mask[cell_idx]  # (N, |Q|)
-            out = []
-            for i in range(len(M)):
-                js = np.nonzero(allowed[i])[0]
-                out.append(
-                    [
-                        {"query_id": int(qids[j]), "cosine_sim": float(cos[i, j])}
-                        for j in js
-                    ]
-                )
-            return pd.Series(out)
-
-        hits = corp.select(
-            "neighbor_id", F.explode(_fused_hits("__cvec")).alias("h")
-        ).select(
-            F.col("h.query_id").alias("query_id"),
-            "neighbor_id",
-            F.col("h.cosine_sim").alias("cosine_sim"),
-        )
-        if exclude_self:
-            hits = hits.filter(F.col("query_id") != F.col("neighbor_id"))
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("cosine_sim"), F.asc("neighbor_id")
-        )
-        return (
-            hits.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank", "cosine_sim")
-        )
-
-    if probe_strategy == "driver":
-        q_rows = (
-            query_rows
-            if query_rows is not None
-            else queries.select(id_col, vec_col).collect()
-        )
-        C = np.asarray(cv_list, dtype=np.float64)
-        ids = np.asarray(cid_list, dtype=np.int64)
-        probe_rows = []
-        if q_rows:
-            Q = np.asarray(
-                [[float(x) for x in r[1]] for r in q_rows], dtype=np.float64
-            )
-            qns = np.sqrt((Q * Q).sum(axis=1))
-            d2 = ((Q[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-            # stable argsort over cid-sorted centroids: distance ties
-            # break toward the lower cid, same as the expr/arrow paths
-            order = np.argsort(d2, axis=1, kind="stable")[:, :probe_n]
-            for i, r in enumerate(q_rows):
-                qv = [float(x) for x in r[1]]
-                for cid in ids[order[i]]:
-                    probe_rows.append(
-                        {
-                            "query_id": int(r[0]),
-                            "__qv": qv,
-                            "__qn": float(qns[i]),
-                            "cid": int(cid),
-                        }
-                    )
-        probes = _literal_rows_df(
-            queries.sparkSession,
-            probe_rows,
-            "query_id: long, __qv: array<double>, __qn: double, cid: long",
-        )
-    elif probe_strategy == "arrow":
-
-        @F.pandas_udf("array<long>")
-        def _probe_cells(v):
-            import numpy as np
-            import pandas as pd
-
-            if len(v) == 0:
-                return pd.Series([], dtype=object)
-            C = np.asarray(cv_list, dtype=np.float64)
-            ids = np.asarray(cid_list, dtype=np.int64)
-            M = np.stack(v.to_numpy()).astype(np.float64)
-            d2 = ((M[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-            order = np.argsort(d2, axis=1, kind="stable")[:, :probe_n]
-            return pd.Series([ids[row].tolist() for row in order])
-
-        probes = q.withColumn("__cids", _probe_cells("__qv")).select(
-            "query_id", "__qv", "__qn", F.explode("__cids").alias("cid")
-        )
-    else:
-        cells = F.transform(
-            F.slice(_centroid_order("__qv", cent_list), 1, probe_n),
-            lambda s: s["cid"],
-        )
-        probes = q.select(
-            "query_id", "__qv", "__qn", F.explode(cells).alias("cid")
-        )
-
-    pairs = F.broadcast(probes).join(assigned, "cid")
-    if exclude_self:
-        pairs = pairs.filter(F.col("query_id") != F.col("neighbor_id"))
-    scored = pairs.select(
-        "query_id",
+    hits = corp.select(
+        "neighbor_id", F.explode(_fused_hits("__cvec")).alias("h")
+    ).select(
+        F.col("h.query_id").alias("query_id"),
         "neighbor_id",
-        _pair_cosine("__qv", "__cvec", "__qn", "__cn").alias("cosine_sim"),
+        F.col("h.cosine_sim").alias("cosine_sim"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
+    if exclude_self:
+        hits = hits.filter(F.col("query_id") != F.col("neighbor_id"))
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("cosine_sim"), F.asc("neighbor_id")
+    )
     return (
-        scored.withColumn("rank", F.row_number().over(w))
+        hits.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "rank", "cosine_sim")
     )
-
-
-def label_centroids(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    label_col: str = "label",
-    round_to: int = 6,
-) -> DataFrame:
-    """Per-label embedding centroid — the building block behind IVF
-    training, class prototypes, and cluster summarization.
-
-    Distributed array-average in the canonical Spark shape: posexplode
-    the vectors to (label, pos, v) — D rows per vector — then a plain
-    groupBy(label, pos) average (map-side partial aggs apply), then
-    reassemble each centroid by sorting the D (pos, avg) structs back
-    into an array. Per-label state is one D-length array — dimension-
-    sized, never corpus-sized; the wide shuffle key (label, pos) gives
-    D× the parallelism of a per-label reduce, which is what keeps hot
-    labels from bottlenecking a reducer at scale.
-
-    Averages are rounded to ``round_to`` decimals so results are
-    reproducible across summation orders (and mirrorable in any
-    engine)."""
-    per = label_centroids_long(df, vec_col, label_col, round_to)
-    cent = per.groupBy(label_col).agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "c"))), lambda s: s["c"]
-        ).alias("centroid"),
-        F.first("n_vectors").alias("n_vectors"),
-    )
-    return cent
 
 
 def label_centroids_long(
@@ -808,8 +557,7 @@ def label_centroids_long(
     the distributed-native shape — the (label, pos) shuffle key gives
     D× the parallelism of a per-label reduce, and downstream consumers
     (IVF cell assignment, drift monitors) join on (label, pos) without
-    ever materializing a driver-side array. ``label_centroids``
-    reassembles the array<double> from this."""
+    ever materializing a driver-side array."""
     ex = df.select(label_col, F.posexplode(vec_col).alias("pos", "v"))
     per = ex.groupBy(label_col, "pos").agg(
         F.round(F.avg(F.col("v").cast("double")), round_to).alias("c")
@@ -1063,7 +811,7 @@ def pq_train(
     the same Spark shapes as :func:`kmeans_fit`:
 
     - initialization: the sub-vectors of the first ``k`` vectors by id
-      (deterministic, like ``default_centroids``);
+      (deterministic, like the first-k IVF centroid table);
     - each iteration: ONE Arrow assignment pass codes every subspace
       simultaneously, then ONE posexplode + groupBy(subspace, code,
       component) average updates all m·k·(D/m) codebook cells in a
@@ -1278,45 +1026,6 @@ def gram_matrix(
     return part.groupBy("i", "j").agg(F.sum("partial").alias("g"))
 
 
-def pca_top_component(
-    gram_df: DataFrame,
-    dim: int = 64,
-    n_iter: int = 3,
-    round_to: int = 6,
-) -> DataFrame:
-    """Top principal axis from a Gram matrix by DETERMINISTIC power
-    iteration — the eigen step of distributed PCA: the corpus-sized
-    work (the Gram matrix, see gram_matrix) is already reduced to a
-    dim×dim relation, so the iteration is dimension-sized driver
-    control-plane, the same contract as IVF's k-means centroids.
-
-    Determinism spec (so a SQL oracle can replay it literally): start
-    from the all-ones vector; each step computes w = G·v in float64,
-    max-normalizes (divide by max|w| — no sqrt, so no libm variance),
-    and ROUNDS each component to ``round_to`` dp half-away-from-zero
-    before the next multiply. The rounding quantizes away the last-bit
-    noise of differing summation orders (numpy's pairwise dot vs a SQL
-    SUM's arbitrary order), which is what makes the loadings
-    hash-comparable cross-engine — the identical discipline the PQ-ADC
-    and trained-IVF entries use. n_iter is part of the spec, not a
-    convergence knob (the pagerank entry's unrolled-supersteps
-    precedent).
-
-    Returns a dim-row (i, loading) relation as a pure-JVM literal
-    plan; the only Spark job run here is collecting the dim²-row Gram
-    upper triangle. Callers that reuse the Gram across invocations
-    should collect it ONCE and call ``pca_top_component_from_rows``
-    with the cached row list — caching the lazy DataFrame and
-    re-collecting re-runs the distributed Gram job every time."""
-    return pca_top_component_from_rows(
-        gram_df.sparkSession,
-        gram_df.collect(),  # dim*(dim+1)/2 rows — control-plane
-        dim=dim,
-        n_iter=n_iter,
-        round_to=round_to,
-    )
-
-
 def pca_top_component_from_rows(
     spark,
     rows,
@@ -1324,11 +1033,24 @@ def pca_top_component_from_rows(
     n_iter: int = 3,
     round_to: int = 6,
 ) -> DataFrame:
-    """Power-iteration eigen step over an already-COLLECTED Gram upper
-    triangle (list of (i, j, g) rows). Pure driver arithmetic + a
-    literal result relation: runs zero Spark jobs, which is what makes
-    the per-session Gram row cache actually deliver its
-    'distributed job paid once' contract."""
+    """Top principal axis by DETERMINISTIC power iteration over an
+    already-COLLECTED Gram upper triangle (list of (i, j, g) rows, see
+    gram_matrix) — the eigen step of distributed PCA: the corpus-sized
+    work is already reduced to dim² rows, so the iteration is
+    dimension-sized driver control plane, the same contract as IVF's
+    k-means centroids. Pure driver arithmetic + a literal result
+    relation: runs zero Spark jobs, which is what makes the
+    per-session Gram row cache deliver its 'distributed job paid
+    once' contract.
+
+    Determinism spec (so a SQL oracle can replay it literally): start
+    from the all-ones vector; each step computes w = G·v in float64,
+    max-normalizes (divide by max|w| — no sqrt, so no libm variance),
+    and ROUNDS each component to ``round_to`` dp half-away-from-zero
+    before the next multiply. The rounding quantizes away the last-bit
+    noise of differing summation orders, which is what makes the
+    loadings hash-comparable cross-engine. n_iter is part of the spec,
+    not a convergence knob."""
     import numpy as np
 
     d = int(dim)

@@ -15,7 +15,7 @@ from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
 from ..functions.scalars import result_to_points
-from .scale import sum_i64_checked
+from .scale import session_parallelism, sum_i64_checked
 
 SECONDS_PER_DAY = 86_400
 
@@ -86,18 +86,6 @@ def latest_per_group(
     return top_n_per_group(df, partition_cols, order, 1)
 
 
-def lag_delta(
-    df: DataFrame, partition_cols: Sequence[str], ts_col: str, value_col: str,
-    out_col: str | None = None,
-) -> DataFrame:
-    """Match-over-match delta (engine extension noted in SURVEY §2.5)."""
-    w = Window.partitionBy(*partition_cols).orderBy(ts_col)
-    return df.withColumn(
-        out_col or f"{value_col}_delta",
-        F.col(value_col) - F.lag(value_col).over(w),
-    )
-
-
 def sessionize(
     df: DataFrame,
     key_col: str,
@@ -122,7 +110,6 @@ def grouped_zscore(
     keys: Sequence[str],
     value_col: str,
     out_col: str = "zscore",
-    pin_width: bool = True,
 ) -> DataFrame:
     """Per-group z-score via the grouped-map escape hatch —
     ``groupBy(...).applyInArrow`` (SURVEY §2.8), the engine's
@@ -169,31 +156,14 @@ def grouped_zscore(
     # ENSURE_REQUIREMENTS exchange the groupBy would otherwise insert
     # (one hashpartitioning exchange in the plan) and is
     # scale-adaptive: never narrower than the session's configured
-    # shuffle width, at least one task per core. Pass
-    # ``pin_width=False`` when the input is ALREADY hash-partitioned
-    # on the keys (a prior groupBy/repartition on the same keys) —
-    # there the old zero-exchange plan was free and the pin would add
-    # a full shuffle. The width probe degrades to the unpinned plan in
-    # sessions where it cannot be computed (Spark Connect has no
-    # sparkContext; shuffle.partitions may be non-numeric, e.g.
-    # "auto").
-    if pin_width:
-        # Only the WIDTH PROBE may degrade silently (Spark Connect has
-        # no sparkContext; shuffle.partitions may be non-numeric). The
-        # repartition itself runs outside the try so a genuine failure
-        # (e.g. an unresolved key column) surfaces here, not at the
-        # later groupBy (ADVICE r12).
-        width = None
-        try:
-            spark = df.sparkSession
-            width = max(
-                spark.sparkContext.defaultParallelism,
-                int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
-            )
-        except Exception:
-            pass  # environment without the probe — keep the implicit exchange
-        if width is not None:
-            df = df.repartition(width, *[F.col(k) for k in keys])
+    # shuffle width, at least one task per core (Spark Connect
+    # included, via session_parallelism).
+    spark = df.sparkSession
+    width = max(
+        session_parallelism(spark),
+        int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
+    )
+    df = df.repartition(width, *[F.col(k) for k in keys])
     return df.groupBy(*[F.col(k) for k in keys]).applyInArrow(fn, schema)
 
 

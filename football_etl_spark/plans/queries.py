@@ -2171,8 +2171,9 @@ def lsh_ann_topk(spark, sf_dir):
     )
 
 
-# DuckDB mirror of functions/vectors.py l2_distance: same zip-diff-
-# square sequential accumulation, so distance ORDER is identical.
+# DuckDB L2 distance for the IVF/k-means centroid ranking: the sum of
+# squared component differences, the same quantity the Arrow kernels
+# rank by (sqrt keeps the ORDER), so nearest cells are identical.
 def _sql_l2(a: str, b: str) -> str:
     return (
         f"SQRT(LIST_SUM(LIST_TRANSFORM(GENERATE_SERIES(1, LEN({a})), "
@@ -2223,10 +2224,7 @@ def ivf_ann_topk(spark, sf_dir):
     # are vec_id < 8); ONE cached collect feeds both control planes,
     # so steady-state plan construction runs zero Spark jobs
     rows = _q8_rows(spark, sf_dir, e)
-    out = similarity.ivf_topk(
-        e, e.filter(F.col("vec_id") < 8), k=10, n_probe=2,
-        centroids=rows, probe_strategy="fused", query_rows=rows,
-    )
+    out = similarity.ivf_topk(e, rows, rows, k=10, n_probe=2)
     return out.select(
         "query_id",
         "neighbor_id",
@@ -2992,8 +2990,7 @@ def salted_segment_spend(spark, sf_dir):
     "Emitted LONG-FORM (label, pos, c, n_vectors) — one row per "
     "centroid component — which is both the harness-hashable shape "
     "and the shape the next pipeline stage (IVF cell assignment) "
-    "actually joins on; operators/similarity.label_centroids still "
-    "offers the assembled array<double> for in-process callers. "
+    "actually joins on. "
     "Rounded to 6 decimals for summation-order reproducibility "
     "(operators/similarity.label_centroids_long)",
 )
@@ -5056,11 +5053,7 @@ def kmeans_embedding_clusters(spark, sf_dir):
 def ivf_trained_ann_topk(spark, sf_dir):
     e = _t(spark, sf_dir, "embeddings")
     cent = _kmeans_cent(spark, sf_dir)
-    out = similarity.ivf_topk(
-        e, e.filter(F.col("vec_id") < 8), k=10, n_probe=2,
-        centroids=cent, probe_strategy="fused",
-        query_rows=_q8_rows(spark, sf_dir, e),
-    )
+    out = similarity.ivf_topk(e, _q8_rows(spark, sf_dir, e), cent, k=10, n_probe=2)
     return out.select(
         "query_id",
         "neighbor_id",
@@ -11061,7 +11054,7 @@ def psi_value_drift(spark, sf_dir):
     FROM w3
     """,
     doc="top principal axis of the embedding corpus — distributed PCA "
-    "split the canonical way (operators/similarity.pca_top_component "
+    "split the canonical way (operators/similarity.pca_top_component_from_rows "
     "over operators/similarity.gram_matrix): the corpus-sized work "
     "is the int-exact Gram matrix (shuffle volume dim^2-rows, "
     "independent of N), the eigen step is a dimension-sized "
@@ -14771,15 +14764,7 @@ def ivf_recall_at_k(spark, sf_dir):
         "query_id", "neighbor_id"
     )
     ivf = (
-        similarity.ivf_topk(
-            e,
-            qset,
-            k=10,
-            n_probe=2,
-            centroids=rows,
-            probe_strategy="fused",
-            query_rows=rows,
-        )
+        similarity.ivf_topk(e, rows, rows, k=10, n_probe=2)
         .select("query_id", "neighbor_id")
         .withColumn("__hit", F.lit(1))
     )

@@ -15,6 +15,7 @@ pattern. Its Spark-native forms:
 from __future__ import annotations
 
 import os as _os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -100,9 +101,8 @@ def streaming_dedup(
     (``dropDuplicatesWithinWatermark``) — duplicates arriving within
     ``watermark`` of the original are dropped, and key state is
     evicted once the watermark passes it, so state is proportional to
-    the dedup horizon, not the stream's history. The streaming twin
-    of operators/cleaning.dedup_keep_first; same call works on a
-    batch frame (plain dropDuplicates). The at-scale ingest dedup
+    the dedup horizon, not the stream's history. The same call works on
+    a batch frame (plain dropDuplicates). The at-scale ingest dedup
     for replayed/overlapping feeds."""
     if events.isStreaming:
         return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
@@ -232,12 +232,25 @@ def stateful_user_totals(
     )
 
 
-def write_bronze_batch(
-    batch_df: DataFrame,
-    batch_id: int,
-    out_path: str,
-    dedup_keys: tuple[str, ...] = (),
+def _drain_foreach_batch(
+    stream_df: DataFrame,
+    checkpoint_dir: str,
+    write: Callable[[DataFrame, int], None],
 ) -> None:
+    """Run ``write(batch_df, batch_id)`` on every micro-batch of all
+    currently available input (``availableNow`` trigger) and block
+    until the stream drains — the shared start-up of the foreachBatch
+    sinks below."""
+    (
+        stream_df.writeStream.foreachBatch(write)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
+def write_bronze_batch(batch_df: DataFrame, batch_id: int, out_path: str) -> None:
     """Idempotent micro-batch landing: each batch OVERWRITES its own
     ``batch_id=N`` subdirectory, so a replay of the same batch (crash
     after the parquet write but before the checkpoint offset commit)
@@ -246,18 +259,10 @@ def write_bronze_batch(
     at-least-once to exactly-once on a plain parquet sink (the
     dependency-free analog of a Delta/Iceberg MERGE). Readers see
     ``batch_id`` as a normal discovered partition column."""
-    out = batch_df
-    if dedup_keys:
-        out = out.dropDuplicates(list(dedup_keys))
-    out.write.mode("overwrite").parquet(f"{out_path}/batch_id={batch_id}")
+    batch_df.write.mode("overwrite").parquet(f"{out_path}/batch_id={batch_id}")
 
 
-def incremental_parquet_sink(
-    stream_df: DataFrame,
-    out_path: str,
-    checkpoint_dir: str,
-    dedup_keys: tuple[str, ...] = (),
-) -> None:
+def incremental_parquet_sink(stream_df: DataFrame, out_path: str, checkpoint_dir: str) -> None:
     """Land a stream into a parquet bronze table via ``foreachBatch`` —
     the engine's incremental LOAD stage (reference: per-day CSV appends,
     /root/reference/daily_match_scraper.py:587-628, made exactly-once).
@@ -274,15 +279,9 @@ def incremental_parquet_sink(
     """
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
-        write_bronze_batch(batch_df, batch_id, out_path, dedup_keys)
+        write_bronze_batch(batch_df, batch_id, out_path)
 
-    q = (
-        stream_df.writeStream.foreachBatch(_write)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_foreach_batch(stream_df, checkpoint_dir, _write)
 
 
 def latest_silver_version(silver_path: str, below: int | None = None) -> int | None:
@@ -419,13 +418,7 @@ def incremental_agg_sink(
             value_col, scale,
         )
 
-    q = (
-        stream_df.writeStream.foreachBatch(_write)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_foreach_batch(stream_df, checkpoint_dir, _write)
 
 
 def read_silver(
@@ -461,68 +454,7 @@ def incremental_silver_sink(
             batch_df.sparkSession, batch_df, batch_id, silver_path, keys, order_col
         )
 
-    q = (
-        stream_df.writeStream.foreachBatch(_write)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def enrich_stream(
-    stream_df: DataFrame,
-    dim_df: DataFrame,
-    on: list[str] | str,
-    how: str = "left",
-) -> DataFrame:
-    """Stream-static enrichment join: every micro-batch joins against
-    the batch dimension table — Spark re-plans the static side per
-    batch, so a dim refreshed in place is picked up without restarting
-    the stream. The dim side is broadcast (it is dimension-sized by
-    definition here); the stream side never shuffles, keeping the
-    stateless micro-batch pipeline map-only. This is the streaming
-    twin of the batch home/away enrichment join."""
-    return stream_df.join(F.broadcast(dim_df), on, how)
-
-
-def interval_stream_join(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    left_ts: str,
-    right_ts: str,
-    lower_s: int,
-    upper_s: int,
-    watermark_s: int = 3600,
-    right_prefix: str = "r_",
-) -> DataFrame:
-    """Watermarked STREAM-STREAM inner join: pairs with equal ``key``
-    and ``right_ts`` within ``[left_ts+lower_s, left_ts+upper_s]`` —
-    the streaming twin of operators/joins.range_join (e.g. purchases
-    joined to the same user's trailing-hour activity as both arrive).
-
-    Both sides carry watermarks and the time bound is written directly
-    on the two event-time columns, which is what lets the engine infer
-    a state-cleanup constraint: buffered rows are dropped once the
-    other side's watermark passes their join window, so state is
-    bounded by (window + watermark) × arrival rate, not by the stream
-    so far. Right columns come back prefixed."""
-    rp = right_prefix
-    r = right.select(*[F.col(c).alias(f"{rp}{c}") for c in right.columns])
-    l = left.withWatermark(left_ts, f"{int(watermark_s)} seconds")
-    r = r.withWatermark(f"{rp}{right_ts}", f"{int(watermark_s)} seconds")
-
-    def _shifted(off: int) -> str:
-        sign = "-" if off < 0 else "+"
-        return f"{left_ts} {sign} INTERVAL {abs(int(off))} SECOND"
-
-    cond = F.expr(
-        f"{rp}{key} = {key}"
-        f" AND {rp}{right_ts} >= {_shifted(lower_s)}"
-        f" AND {rp}{right_ts} <= {_shifted(upper_s)}"
-    )
-    return l.join(r, cond, "inner")
+    _drain_foreach_batch(stream_df, checkpoint_dir, _write)
 
 
 def stream_static_enriched_totals(
@@ -590,13 +522,7 @@ def fanout_two_sinks(
             batch_df, batch_id, bronze_path, metrics_path, group_col, value_col
         )
 
-    q = (
-        stream_df.writeStream.foreachBatch(_write)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_foreach_batch(stream_df, checkpoint_dir, _write)
 
 
 def fanout_write_batch(

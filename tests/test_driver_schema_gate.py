@@ -11,7 +11,7 @@ blind to it: ``oracle_harness._norm`` normalizes Decimal→float before
 comparing, and the r10 ``_driver_compat_problems`` probe only flagged
 {int,float} dtype-kind pairs.
 
-This gate closes the class structurally: NO registered (or staged)
+This gate closes the class structurally: NO registered
 entry may emit a final schema containing DecimalType, ArrayType, or
 MapType — the three Spark types whose pandas landing differs from
 DuckDB's fetch in a way the driver's canonicalizer cannot reconcile
@@ -31,7 +31,7 @@ from __future__ import annotations
 
 from pyspark.sql.types import ArrayType, DecimalType, MapType
 
-from football_etl_spark.plans.queries import REGISTRY, STAGED
+from football_etl_spark.plans.queries import REGISTRY
 
 from .conftest import SF_SMOKE
 
@@ -45,10 +45,10 @@ _HOSTILE = (DecimalType, ArrayType, MapType)
 
 def test_no_driver_hostile_final_types(spark):
     violations = []
-    for name in sorted(set(REGISTRY) | set(STAGED)):
+    for name in sorted(REGISTRY):
         if name in HOSTILE_OK:
             continue
-        q = REGISTRY.get(name) or STAGED[name]
+        q = REGISTRY[name]
         schema = q.fn(spark, SF_SMOKE).schema
         for field in schema.fields:
             if isinstance(field.dataType, _HOSTILE):

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from football_etl_spark.io.loader import load_table
 from football_etl_spark.plans.hint_audit import audit_hints, violations
-from football_etl_spark.plans.queries import REGISTRY, STAGED
+from football_etl_spark.plans.queries import REGISTRY
 
 from .conftest import SF_SMOKE
 
@@ -70,13 +70,9 @@ ALLOWED: dict[str, set[frozenset]] = {
 }
 
 
-def _entries():
-    return sorted(REGISTRY) + sorted(STAGED)
-
-
-@pytest.mark.parametrize("name", _entries())
+@pytest.mark.parametrize("name", sorted(REGISTRY))
 def test_no_sf_scaled_broadcast_hints(spark, name):
-    qd = REGISTRY.get(name) or STAGED[name]
+    qd = REGISTRY[name]
     allow = frozenset(ALLOWED.get(name, set()))
     bad = violations(qd.fn(spark, SF_SMOKE), allow=allow)
     assert not bad, (
@@ -90,7 +86,7 @@ def test_allowlist_has_no_dead_entries(spark):
     """Every ALLOWED entry must still correspond to a live hint —
     otherwise the allowlist rots into a bypass for future hints."""
     for name, allowed_sets in ALLOWED.items():
-        qd = REGISTRY.get(name) or STAGED.get(name)
+        qd = REGISTRY.get(name)
         assert qd is not None, f"ALLOWED names unknown query {name}"
         live = {
             r["sf_tables"]

@@ -84,21 +84,12 @@ def test_asof_join_uses_broadcast(spark):
     assert "CartesianProduct" not in plan, plan
 
 
-def _both_tiers():
-    from football_etl_spark.plans.queries import STAGED
-
-    return sorted(REGISTRY) + sorted(STAGED)
-
-
-@pytest.mark.parametrize("name", _both_tiers())
+@pytest.mark.parametrize("name", sorted(REGISTRY))
 def test_no_cartesian_product_anywhere(spark, name):
-    """No registered OR staged query may plan an unbounded cartesian
-    product — the bar applies before promotion, not after. (Broadcast
-    nested-loop against an explicitly broadcast, bounded query set —
-    ANN top-k — is the one sanctioned n×m pattern.)"""
-    from football_etl_spark.plans.queries import STAGED
-
-    qd = REGISTRY.get(name) or STAGED[name]
+    """No registered query may plan an unbounded cartesian product.
+    (Broadcast nested-loop against an explicitly broadcast, bounded
+    query set — ANN top-k — is the one sanctioned n×m pattern.)"""
+    qd = REGISTRY[name]
     plan = plan_str(qd.fn(spark, SF_SMOKE), "simple")
     assert "CartesianProduct" not in plan, f"{name} plans a cartesian product:\n{plan}"
 
@@ -520,68 +511,50 @@ def test_raw_dump_ingest_is_map_only_single_parse(spark):
     assert plan.count("from_json") == 1, plan
 
 
-# --- staged (next-round) entries: same scale contracts pre-promotion ---
+# --- entries promoted from the retired staged tier: scale contracts ---
 
 
 def test_q12_pushdown_partial_agg_no_cartesian(spark):
-    """Staged Q12 shape: the IN-list AND both shipdate bounds must
+    """Q12 shape: the IN-list AND both shipdate bounds must
     reach the lineitem scan (at 100 TB the 2-year slice prunes row
     groups before the orderkey join), the 2-value groupBy must partial-
     aggregate map-side, and the residual late-by-30-days predicate
     must not degrade the join to a nested loop."""
-    from football_etl_spark.plans.queries import REGISTRY, STAGED
-
-    plan = plan_str((REGISTRY.get("q12_priority_shipping") or REGISTRY["q12_priority_shipping"]).fn(spark, SF_SMOKE))
+    plan = plan_str(REGISTRY["q12_priority_shipping"].fn(spark, SF_SMOKE))
     assert "In(l_returnflag, [A,R])" in plan, plan
     assert "GreaterThanOrEqual(l_shipdate,1996-01-01" in plan, plan
     assert "LessThan(l_shipdate,1998-01-01" in plan, plan
-    simple = plan_str((REGISTRY.get("q12_priority_shipping") or REGISTRY["q12_priority_shipping"]).fn(spark, SF_SMOKE), "simple")
+    simple = plan_str(REGISTRY["q12_priority_shipping"].fn(spark, SF_SMOKE), "simple")
     assert simple.count("HashAggregate") >= 2, simple
     assert "CartesianProduct" not in simple and "NestedLoop" not in simple, simple
 
 
 def test_pq_serving_single_scan_no_joins(spark):
-    """Staged PQ ADC serving: distances come from the per-query lookup
+    """PQ ADC serving: distances come from the per-query lookup
     tables closed over the Arrow kernel — the plan must scan the
     corpus ONCE, plan ZERO joins (the LUT is driver-side control
     plane, never a relation), and rank via a per-query window."""
-    from football_etl_spark.plans.queries import REGISTRY, STAGED
-
-    plan = plan_str((REGISTRY.get("pq_adc_ann_topk") or REGISTRY["pq_adc_ann_topk"]).fn(spark, SF_SMOKE), "simple")
+    plan = plan_str(REGISTRY["pq_adc_ann_topk"].fn(spark, SF_SMOKE), "simple")
     assert plan.count("Scan parquet") == 1, plan
     assert "Join" not in plan, plan
     assert "Window" in plan, plan
 
 
-def test_staged_entries_no_cartesian(spark):
-    """No staged entry may plan an unbounded cartesian product (the
-    same blanket rule the registry enforces)."""
-    from football_etl_spark.plans.queries import REGISTRY, STAGED
-
-    for name, qd in STAGED.items():
-        plan = plan_str(qd.fn(spark, SF_SMOKE), "simple")
-        assert "CartesianProduct" not in plan, f"{name}:\n{plan}"
-
-
 def test_multi_band_counts_single_scan(spark):
-    """Staged Q88 shape: eight band counts must come from ONE lineitem
+    """Q88 shape: eight band counts must come from ONE lineitem
     scan with map-side partial aggregation — never the literal 8-way
     cross join of single-count subqueries."""
-    from football_etl_spark.plans.queries import REGISTRY, STAGED
-
-    plan = plan_str((REGISTRY.get("multi_band_scan_counts") or REGISTRY["multi_band_scan_counts"]).fn(spark, SF_SMOKE), "simple")
+    plan = plan_str(REGISTRY["multi_band_scan_counts"].fn(spark, SF_SMOKE), "simple")
     assert plan.count("Scan parquet") == 1, plan
     assert plan.count("HashAggregate") >= 2, plan
     assert "Join" not in plan, plan
 
 
 def test_point_in_time_join_equi_key_with_range_residual(spark):
-    """Staged point-in-time lookup: the interval predicate must ride
+    """Point-in-time lookup: the interval predicate must ride
     as a residual on a HASH join keyed on user_id — at 100 TB a
     nested-loop scan of the SCD2 history per fact is unrunnable."""
-    from football_etl_spark.plans.queries import REGISTRY, STAGED
-
-    plan = plan_str((REGISTRY.get("point_in_time_state_join") or REGISTRY["point_in_time_state_join"]).fn(spark, SF_SMOKE), "simple")
+    plan = plan_str(REGISTRY["point_in_time_state_join"].fn(spark, SF_SMOKE), "simple")
     assert "NestedLoop" not in plan and "CartesianProduct" not in plan, plan
     assert "Join" in plan and "user_id" in plan, plan
 
@@ -591,9 +564,7 @@ def test_rolling_median_single_exchange(spark):
     BOTH the daily rollup (clustering on (o_custkey, di) is satisfied
     by partitioning on o_custkey alone) and the window's
     partitionBy — the r8 plan contract its docstring claims."""
-    from football_etl_spark.plans.queries import REGISTRY, STAGED
-
-    qd = REGISTRY.get("rolling_median_spend") or REGISTRY["rolling_median_spend"]
+    qd = REGISTRY["rolling_median_spend"]
     plan = plan_str(qd.fn(spark, SF_SMOKE), "simple")
     assert plan.count("Exchange hashpartitioning") == 1, plan
 
@@ -603,9 +574,7 @@ def test_gram_matrix_shuffle_is_dim_bounded(spark):
     partial-sum groupBy downstream of mapInPandas — the N×d data
     itself must never shuffle (no exchange between the scan and the
     Python stage)."""
-    from football_etl_spark.plans.queries import REGISTRY, STAGED
-
-    qd = REGISTRY.get("embedding_gram_matrix") or REGISTRY["embedding_gram_matrix"]
+    qd = REGISTRY["embedding_gram_matrix"]
     plan = plan_str(qd.fn(spark, SF_SMOKE), "simple")
     assert plan.count("Exchange hashpartitioning") == 1, plan
     assert "MapInPandas" in plan, plan
@@ -617,9 +586,7 @@ def test_gram_matrix_shuffle_is_dim_bounded(spark):
 def test_join_skew_profile_take_ordered(spark):
     """join_skew_profile's top-10 must plan as TakeOrderedAndProject
     (per-partition heaps + driver merge), never a global sort."""
-    from football_etl_spark.plans.queries import REGISTRY, STAGED
-
-    qd = REGISTRY.get("join_skew_profile") or REGISTRY["join_skew_profile"]
+    qd = REGISTRY["join_skew_profile"]
     plan = plan_str(qd.fn(spark, SF_SMOKE), "simple")
     assert "TakeOrderedAndProject" in plan, plan
 
@@ -628,8 +595,6 @@ def test_half_sample_stderr_single_aggregation_no_joins(spark):
     """The BRR estimator must live INSIDE the mean's own aggregation:
     one partial+final agg pair over the scan, no join, no window, no
     per-replicate re-read of the fact table."""
-    from football_etl_spark.plans.queries import STAGED
-
     plan = plan_str(REGISTRY["half_sample_stderr_revenue"].fn(spark, SF_SMOKE), "simple")
     assert plan.count("Scan parquet") == 1, plan
     assert "Join" not in plan and "Window" not in plan, plan
@@ -640,8 +605,6 @@ def test_lorenz_gini_rank_is_bucket_partitioned(spark):
     """The radix rank must window-partition BY BUCKET — a global
     single-partition rank window (partitioning on nothing) is the
     exact shape the entry exists to avoid."""
-    from football_etl_spark.plans.queries import STAGED
-
     plan = plan_str(REGISTRY["lorenz_gini_order_value"].fn(spark, SF_SMOKE), "simple")
     rank_windows = [
         ln for ln in plan.splitlines()
@@ -656,8 +619,6 @@ def test_lorenz_gini_rank_is_bucket_partitioned(spark):
 def test_entropy_pivot_never_shuffles_type_grain(spark):
     """The bounded-domain fast path must aggregate (user, day) ONCE —
     no (user, day, event_type) grouping anywhere in the plan."""
-    from football_etl_spark.plans.queries import STAGED
-
     plan = plan_str(REGISTRY["user_day_entropy_profile"].fn(spark, SF_SMOKE), "simple")
     # the conditional sums may READ event_type, but no exchange may
     # ever PARTITION on it — that's the 22.5M-row intermediate the

@@ -22,7 +22,7 @@ from __future__ import annotations
 
 import pytest
 
-from football_etl_spark.plans.queries import REGISTRY, STAGED
+from football_etl_spark.plans.queries import REGISTRY
 
 from .conftest import SF_SMOKE
 
@@ -35,12 +35,12 @@ EMPTY_OK: dict[str, str] = {}
 # (name, column) -> reason an all-NULL column is legitimate at sf0.001.
 ALL_NULL_OK: dict[tuple[str, str], str] = {}
 
-_ALL = sorted(set(REGISTRY) | set(STAGED))
+_ALL = sorted(REGISTRY)
 
 
 @pytest.mark.parametrize("name", _ALL)
 def test_registry_non_vacuous(spark, name):
-    q = REGISTRY.get(name) or STAGED[name]
+    q = REGISTRY[name]
     rows = q.fn(spark, SF_SMOKE).collect()
     if not rows:
         assert name in EMPTY_OK, (

@@ -1,16 +1,16 @@
-"""Semantic invariants for the round-7 staged wave — properties the
+"""Semantic invariants for the round-7 wave — properties the
 oracle hash-gate can't state (it proves cross-engine equality, not
 that BOTH engines compute the right thing)."""
 
 from __future__ import annotations
 
-from football_etl_spark.plans.queries import REGISTRY, STAGED
+from football_etl_spark.plans.queries import REGISTRY
 
 from .conftest import SF_SMOKE
 
 
 def _q(name):
-    return (REGISTRY.get(name) or STAGED[name]).fn
+    return REGISTRY[name].fn
 
 
 def test_pagerank_mass_conserved_and_positive(spark):

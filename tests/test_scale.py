@@ -165,21 +165,21 @@ def test_runtime_bloom_filter_fires_on_selective_fact_fact_join(spark):
                 spark.conf.set(k, v)
 
 
-STAGED_PARTITION_SENSITIVE = [
-    # staged entries whose plans involve Arrow kernels, driver-side
-    # training state, or segment-key fan-out — same invariance bar
-    # pre-promotion
+PARTITION_SENSITIVE = [
+    # entries whose plans involve Arrow kernels, driver-side training
+    # state, or segment-key fan-out (first held to this bar as staged
+    # entries, before promotion)
     "pq_adc_ann_topk",
     "fuzzy_name_matches",
     "robust_outlier_flags",
     "multi_band_scan_counts",
-    # round-6 staged wave: data-derived sampling rates, decimal-summed
+    # round-6 wave: data-derived sampling rates, decimal-summed
     # LM scores, interval-join fan-out + rank, per-group NTILE bins
     "temperature_resampled_corpus",
     "unigram_logprob_scores",
     "attribution_first_touch",
     "equi_depth_histogram",
-    # round-7 staged wave: per-segment NTILE codes, windowed segment
+    # round-7 wave: per-segment NTILE codes, windowed segment
     # ids, iterative join-agg rounds, co-moment aggregates
     "rfm_segments",
     "running_balance_resets",
@@ -191,13 +191,13 @@ STAGED_PARTITION_SENSITIVE = [
 
 def test_staged_results_invariant_to_shuffle_partition_count(spark):
     """The registry's partition-count invariance bar applied to the
-    staged tier before promotion."""
-    from football_etl_spark.plans.queries import REGISTRY, STAGED
+    partition-sensitive entries promoted from the retired staged tier."""
+    from football_etl_spark.plans.queries import REGISTRY
 
     old = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        for name in STAGED_PARTITION_SENSITIVE:
-            df = (REGISTRY.get(name) or STAGED[name]).fn(spark, SF_SMOKE)
+        for name in PARTITION_SENSITIVE:
+            df = REGISTRY[name].fn(spark, SF_SMOKE)
             spark.conf.set("spark.sql.shuffle.partitions", "3")
             r_low = sorted(map(repr, (tuple(r) for r in df.collect())))
             spark.conf.set("spark.sql.shuffle.partitions", "17")

@@ -5,6 +5,7 @@ rides on it (content token, release on supersede, Connect fallback)."""
 from __future__ import annotations
 
 import hashlib
+import re
 from pathlib import Path
 from types import SimpleNamespace
 
@@ -185,3 +186,26 @@ def test_contamination_closure_fallback_without_spark_context(spark, monkeypatch
         with pytest.warns(UserWarning, match="UDF closure"):
             out = dedup.contamination_report(train, ev, eval_hashes=(h for h in suite))
     assert _hits(out) == {1: 1, 2: 0, 3: 1}
+
+
+def test_grouped_zscore_pins_width_without_spark_context(spark, monkeypatch):
+    """The grouped-map width pin holds without a sparkContext: the
+    explicit key repartition is in the plan, at the Connect floor
+    width, instead of being silently dropped."""
+    from football_etl_spark.operators import windows
+
+    df = spark.range(40).select(
+        F.col("id").alias("k"), (F.col("id") % 7).cast("double").alias("v")
+    )
+    width = max(
+        session.default_parallelism(),
+        int(spark.conf.get("spark.sql.shuffle.partitions")),
+    )
+    with monkeypatch.context() as m:
+        m.setattr(
+            type(df), "sparkSession", property(lambda d: _NoContextSession(d._session))
+        )
+        out = windows.grouped_zscore(df, ["k"], "v")
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert re.search(rf"RepartitionByExpression \[k#\d+L?\], {width}\b", plan), plan
+    assert out.count() == 40

@@ -35,7 +35,7 @@ from __future__ import annotations
 import pytest
 
 from football_etl_spark.io.loader import load_table
-from football_etl_spark.plans.queries import REGISTRY, STAGED
+from football_etl_spark.plans.queries import REGISTRY
 
 from .conftest import SF_SMOKE
 from .oracle_harness import _norm
@@ -161,13 +161,6 @@ _DUAL_OK: set[str] = set()
 _DUAL_ATTEMPTED: set[str] = set()
 
 _ALL_ORACLE_NAMES = sorted(n for n, q in REGISTRY.items() if q.oracle is not None)
-_STAGED_ORACLE_NAMES = sorted(n for n, q in STAGED.items() if q.oracle is not None)
-
-# one body serves both tiers; only registry cases feed the breadth
-# floor (staged entries join it when promoted)
-_ALL_CASES = [("registry", n) for n in _ALL_ORACLE_NAMES] + [
-    ("staged", n) for n in _STAGED_ORACLE_NAMES
-]
 
 
 @pytest.fixture(scope="module", autouse=True)
@@ -189,15 +182,18 @@ def _views(spark):
     spark.conf.unset("spark.sql.parser.escapedStringLiterals")
 
 
-@pytest.mark.parametrize(("tier", "name"), _ALL_CASES)
-def test_oracle_sql_runs_on_spark(spark, tier, name):
+# ids keep the "registry-" prefix they carried while a second
+# (staged) tier existed, so recorded test ids stay stable
+@pytest.mark.parametrize(
+    "name", _ALL_ORACLE_NAMES, ids=[f"registry-{n}" for n in _ALL_ORACLE_NAMES]
+)
+def test_oracle_sql_runs_on_spark(spark, name):
     from pyspark.errors import AnalysisException, ParseException
 
-    if tier == "registry":
-        _DUAL_ATTEMPTED.add(name)
+    _DUAL_ATTEMPTED.add(name)
     if name in EXCLUDED:
         pytest.skip(EXCLUDED[name])
-    qd = (REGISTRY if tier == "registry" else STAGED)[name]
+    qd = REGISTRY[name]
     try:
         sdf = spark.sql(qd.oracle)
         sql_rows = sdf.collect()
@@ -224,8 +220,7 @@ def test_oracle_sql_runs_on_spark(spark, tier, name):
         (tuple(_norm(r[order.index(c)]) for c in cols) for r in rows), key=repr
     )
     assert key(sql_rows, s_cols, sdf.columns) == key(api_rows, a_cols, df.columns)
-    if tier == "registry":
-        _DUAL_OK.add(name)
+    _DUAL_OK.add(name)
 
 
 def test_dual_surface_breadth():

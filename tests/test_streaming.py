@@ -312,7 +312,7 @@ def test_stream_static_enrichment_matches_batch(spark):
         stream = incremental.read_event_stream(
             spark, feed, spark.read.parquet(feed).schema
         )
-        enriched = incremental.enrich_stream(stream, dim, "user_id").select(
+        enriched = stream.join(F.broadcast(dim), "user_id", "left").select(
             "event_id", "segment"
         )
         q = (
@@ -356,8 +356,10 @@ def test_interval_stream_join_matches_batch(spark):
         others.coalesce(1).write.parquet(ofeed)
         ps = incremental.read_event_stream(spark, pfeed, spark.read.parquet(pfeed).schema)
         os_ = incremental.read_event_stream(spark, ofeed, spark.read.parquet(ofeed).schema)
-        joined = incremental.interval_stream_join(
-            ps, os_, "user_id", "ts", "ts", -3600, 0
+        os_ = os_.select(*[F.col(c).alias(f"r_{c}") for c in os_.columns])
+        joined = incremental.stream_interval_join(
+            ps, os_, "user_id", "r_user_id", "ts", "r_ts", -3600, 0,
+            watermark="3600 seconds",
         ).select("event_id", "r_event_id")
         q = (
             joined.writeStream.outputMode("append")

@@ -19,7 +19,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import HEADLINE, SF_DIR  # noqa: E402
-from football_etl_spark.plans.queries import REGISTRY, STAGED  # noqa: E402
+from football_etl_spark.plans.queries import REGISTRY  # noqa: E402
 from football_etl_spark.session import get_spark  # noqa: E402
 
 OUT_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", os.environ.get("PLAN_DUMP_ROUND", "r13"))
@@ -41,7 +41,7 @@ def main() -> None:
         },
     )
     for name in names:
-        fn = (REGISTRY.get(name) or STAGED[name]).fn
+        fn = REGISTRY[name].fn
         df = fn(spark, SF_DIR)
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):

@@ -29,8 +29,7 @@ sys.path.insert(0, os.path.join(REPO, "tests"))
 
 
 def main() -> int:
-    argv = [a for a in sys.argv[1:] if a != "--staged"]
-    with_staged = "--staged" in sys.argv
+    argv = sys.argv[1:]
     sf = argv[0] if argv else "/root/testdata/sf0.01"
     from pyspark.sql import SparkSession
 
@@ -44,14 +43,6 @@ def main() -> int:
     from oracle_harness import compare
 
     q, o = entry_mod.queries(), entry_mod.oracle_sql()
-    if with_staged:
-        # next-round candidates ride the same replica gate pre-promotion
-        from football_etl_spark.plans.queries import STAGED
-
-        for name, qd in STAGED.items():
-            q[name] = qd.fn
-            if qd.oracle is not None:
-                o[name] = qd.oracle
     bad: list[tuple[str, object]] = []
     t0 = time.time()
     for i, name in enumerate(q):

@@ -29,7 +29,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from football_etl_spark.plans.queries import REGISTRY, STAGED  # noqa: E402
+from football_etl_spark.plans.queries import REGISTRY  # noqa: E402
 from football_etl_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
@@ -137,11 +137,10 @@ def plan_of(df) -> tuple[str, str]:
 
 
 def iter_entry_plans(spark):
-    """(name, simple, formatted) for every registry + staged entry —
-    the one compile loop both audit modes share."""
-    entries = {**REGISTRY, **{f"{n} (staged)": q for n, q in STAGED.items()}}
-    for name in sorted(entries):
-        df = entries[name].fn(spark, SF_DIR)
+    """(name, simple, formatted) for every registry entry — the one
+    compile loop both audit modes share."""
+    for name in sorted(REGISTRY):
+        df = REGISTRY[name].fn(spark, SF_DIR)
         simple, formatted = plan_of(df)
         yield name, simple, formatted
 

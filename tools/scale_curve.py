@@ -40,7 +40,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
-from football_etl_spark.plans.queries import REGISTRY, STAGED  # noqa: E402
+from football_etl_spark.plans.queries import REGISTRY  # noqa: E402
 from football_etl_spark.session import get_spark  # noqa: E402
 
 SRC = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -149,7 +149,7 @@ def time_duckdb(sf_dir: str, names: list[str]) -> dict[str, float]:
         # native formulation for TIMING (perf_oracle, r12) — the
         # portable dual-surface text can be slower on DuckDB, and a
         # slower DuckDB side would flatter Spark's ladder standings
-        qd = REGISTRY.get(name) or STAGED[name]
+        qd = REGISTRY[name]
         sql = qd.perf_oracle or qd.oracle
         runs = []
         for _ in range(3):

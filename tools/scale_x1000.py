@@ -29,7 +29,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
-from football_etl_spark.plans.queries import REGISTRY, STAGED  # noqa: E402
+from football_etl_spark.plans.queries import REGISTRY  # noqa: E402
 from football_etl_spark.session import get_spark  # noqa: E402
 from tools.scale_curve import ALPHA, DIM_ONLY, KEY_COLS, TABLES, replica_dir  # noqa: E402
 
@@ -97,7 +97,7 @@ def main() -> None:
             p = f"{p}/*.parquet"
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     for name in args.queries:
-        qd = REGISTRY.get(name) or STAGED[name]
+        qd = REGISTRY[name]
         t0 = time.perf_counter()
         # perf_oracle: native formulation for timing (see scale_curve)
         con.execute(qd.perf_oracle or qd.oracle).fetchall()
