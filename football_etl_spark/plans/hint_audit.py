@@ -40,6 +40,8 @@ so every exception is reviewed where the gate is enforced.
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JError
+
 # Parquet tables whose row count grows with the scale factor. nation
 # and region are fixed-cardinality by the data model and deliberately
 # absent.
@@ -77,7 +79,7 @@ def _relation_tables(node) -> set[str]:
             continue
         try:
             paths = m.relation().location().rootPaths()
-        except Exception:  # non-file relation (in-memory, stream)
+        except Py4JError:  # non-file relation (in-memory, stream)
             continue
         for i in range(paths.size()):
             leaf = paths.apply(i).getName()
@@ -101,14 +103,14 @@ def _is_broadcast_hint(node) -> bool:
     if _node_name(node) == "UnresolvedHint":
         try:
             return node.name().lower() in _BROADCAST_HINT_NAMES
-        except Exception:
+        except Py4JError:
             return True
     try:
         strat = node.hints().strategy()
         if strat.isEmpty():
             return False
         return "broadcast" in strat.get().toString().lower()
-    except Exception:
+    except Py4JError:
         return True
 
 
@@ -172,7 +174,7 @@ def _is_bounded(node) -> bool:
     if name == "Join":
         try:
             jt = node.joinType().toString().lower().replace("_", "")
-        except Exception:
+        except Py4JError:
             jt = ""
         left_bounded = _is_bounded(children.apply(0))
         if jt in ("leftsemi", "leftanti"):

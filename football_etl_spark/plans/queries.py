@@ -67,9 +67,9 @@ class QueryDef:
     # subset (dual-surface), the portable spelling can be slower ON
     # DUCKDB than the native one (split_part fan-out vs UNNEST: +0.3
     # to +1.0s each at sf0.1) — and a slower DuckDB side would
-    # FLATTER the Spark-vs-DuckDB bench ratio. Timing tools
-    # (tools/duckdb_comparator.py, tools/scale_curve.py) therefore
-    # time ``perf_oracle or oracle`` so the ratio never benefits from
+    # FLATTER the Spark-vs-DuckDB bench ratio. The timing harness
+    # (tools/measure.py duckdb and depth) therefore times
+    # ``perf_oracle or oracle`` so the ratio never benefits from
     # the portability rewrite; correctness gates (driver, dual-SQL
     # suite) always use ``oracle``. Result-equality of the two texts
     # is itself gated: tests/test_round12_wave.py runs both on DuckDB

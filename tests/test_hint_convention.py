@@ -15,11 +15,20 @@ vacuous-predicate class unrepeatable.
 
 from __future__ import annotations
 
+from types import SimpleNamespace
+
 import pytest
+from py4j.protocol import Py4JError
 from pyspark.sql import functions as F
 
 from football_etl_spark.io.loader import load_table
-from football_etl_spark.plans.hint_audit import audit_hints, violations
+from football_etl_spark.plans.hint_audit import (
+    _is_bounded,
+    _is_broadcast_hint,
+    _relation_tables,
+    audit_hints,
+    violations,
+)
 from football_etl_spark.plans.queries import REGISTRY
 
 from .conftest import SF_SMOKE
@@ -160,3 +169,58 @@ def test_auditor_requires_bound_at_subtree_root(spark):
         .join(o, c.c_custkey == o.o_custkey, "left_semi")
     )
     assert violations(c.join(F.broadcast(semi), "c_custkey")) == []
+
+
+def test_auditor_passes_in_memory_and_range_sides(spark):
+    """A broadcast of a createDataFrame or range relation scans no
+    SF-scaled table, so it passes the gate, and walking it raises
+    nothing (the walker catches only py4j errors)."""
+    o = load_table(spark, SF_SMOKE, "orders")
+    local = spark.createDataFrame([(1, "a"), (2, "b")], ["o_custkey", "tag"])
+    rng = spark.range(5).withColumnRenamed("id", "o_custkey")
+    for side in (local, rng):
+        seeded = o.join(F.broadcast(side), "o_custkey")
+        records = audit_hints(seeded)
+        assert [r["sf_tables"] for r in records] == [frozenset()], records
+        assert violations(seeded) == []
+    assert audit_hints(o.join(F.broadcast(rng), "o_custkey"))[0]["bounded"]
+
+
+class _Failing:
+    """A stand-in py4j plan node whose named Java calls raise the
+    error py4j raises for a missing or failing Java method."""
+
+    def __init__(self, cls: str, failing: set[str], children=()):
+        self._cls, self._failing, self._children = cls, failing, list(children)
+
+    def __getattr__(self, name):
+        if name in self._failing:
+            def fail(*_):
+                raise Py4JError(f"{name} does not exist in the JVM")
+            return fail
+        raise AttributeError(name)
+
+    def getClass(self):
+        return SimpleNamespace(getSimpleName=lambda: self._cls)
+
+    def children(self):
+        kids = self._children
+        return SimpleNamespace(size=lambda: len(kids), apply=lambda i: kids[i])
+
+
+def test_auditor_py4j_fallbacks():
+    """Each Py4JError fallback keeps its result: a relation without a
+    file location scans nothing, an unreadable hint audits as a
+    broadcast, an unreadable join type needs both sides bounded. Any
+    other error escapes."""
+    assert _relation_tables(_Failing("LogicalRelation", {"relation"})) == set()
+    with pytest.raises(AttributeError):
+        _relation_tables(_Failing("LogicalRelation", set()))
+    assert _is_broadcast_hint(_Failing("UnresolvedHint", {"name"}))
+    assert _is_broadcast_hint(_Failing("ResolvedHint", {"hints"}))
+    leaf = _Failing("OneRowRelation", set())
+    scan = _Failing("LogicalRelation", {"relation"})
+    assert _is_bounded(_Failing("Join", {"joinType"}, [leaf, leaf]))
+    assert _is_bounded(_Failing("Join", {"joinType"}, [leaf, scan]))
+    unbounded = _Failing("Generate", set())
+    assert not _is_bounded(_Failing("Join", {"joinType"}, [leaf, unbounded]))
