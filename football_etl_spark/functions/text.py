@@ -24,7 +24,6 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
     "zh": ("的", "是", "了", "在", "我"),
 }
 
-PUNCT_CLASS = r"[^.,!?;:]"
 TOKEN_SPLIT_RE = r"\s+"
 
 
@@ -74,12 +73,6 @@ def stopword_ratio(c: ColumnOrName, stopwords: tuple[str, ...] = STOPWORDS_EN) -
     sw = F.array(*[F.lit(s) for s in stopwords])
     hits = F.size(F.filter(toks, lambda t: F.array_contains(sw, F.lower(t))))
     return F.when(F.size(toks) > 0, hits / F.size(toks)).otherwise(F.lit(0.0))
-
-
-def avg_token_len(c: ColumnOrName) -> Column:
-    toks = tokens(c)
-    total = F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t))
-    return F.when(F.size(toks) > 0, total / F.size(toks)).otherwise(F.lit(0.0))
 
 
 def quality_score(c: ColumnOrName) -> Column:

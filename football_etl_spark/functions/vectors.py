@@ -2,14 +2,13 @@
 
 Built-in higher-order functions (zip_with / aggregate) keep the math
 JVM-side with no Python per row — but NOT whole-stage-codegen'd:
-Catalyst interprets HOF lambdas per element (measured in
-operators/similarity.py: the expression path loses to an Arrow matmul
-~2x at 5000x64), so these expressions are the right default for
-dimension-table-sized inputs and for staying UDF-free, while corpus-
-sized hot paths should prefer the Arrow kernels (``lsh_band_buckets``,
-``quantize_int8_arrow``). Elements are upcast to double before
-accumulation so results are reproducible and match a sequential-
-summing SQL oracle exactly.
+Catalyst interprets HOF lambdas per element (measured: expression LSH
+bucketing lost to an Arrow matmul ~2x at 5000x64), so these
+expressions are the right default for dimension-table-sized inputs
+and for staying UDF-free, while corpus-sized hot paths should prefer
+the Arrow kernels (``lsh_band_buckets``, ``quantize_int8``). Elements
+are upcast to double before accumulation so results are reproducible
+and match a sequential-summing SQL oracle exactly.
 """
 
 from __future__ import annotations
@@ -33,66 +32,21 @@ def norm(a: ColumnOrName) -> Column:
     return F.sqrt(sq)
 
 
-def cosine(a: ColumnOrName, b: ColumnOrName) -> Column:
-    d = norm(a) * norm(b)
-    return F.when(d > 0, dot(a, b) / d).otherwise(F.lit(0.0))
-
-
-def l2_normalize(a: ColumnOrName) -> Column:
-    """Unit-normalize an embedding (array<double> out); zero vectors
-    pass through unchanged (no division by zero). Upstream of cosine
-    retrieval this turns dot product into cosine similarity — the
-    standard pre-index step."""
-    col = _col(a)
-    n = norm(col)
-    return F.when(
-        n > 0, F.transform(col, lambda x: x.cast("double") / n)
-    ).otherwise(F.transform(col, lambda x: x.cast("double")))
-
-
-def quantize_int8(a: ColumnOrName, scale: Column | None = None) -> Column:
-    """Symmetric int8 quantization of an embedding: each element maps
-    to floor(x / scale * 127 + 0.5) clamped to [-127, 127], with
-    ``scale`` defaulting to the vector's max |x| (per-row dynamic
-    range — the usual choice when no global calibration pass exists).
-    floor(+0.5) is used instead of round() so the halfway rule is
-    identical in every engine (round() half-even vs half-away differs
-    across engines); all arithmetic is exact-double.
-
-    8× smaller vectors for ANN candidate generation; exact re-rank
-    stays on the float column."""
-    col = _col(a)
-    s = scale if scale is not None else F.aggregate(
-        col, F.lit(0.0), lambda acc, x: F.greatest(acc, F.abs(x.cast("double")))
-    )
-    q = F.transform(
-        col,
-        lambda x: F.greatest(
-            F.lit(-127),
-            F.least(
-                F.lit(127),
-                F.floor(x.cast("double") / s * 127 + F.lit(0.5)).cast("int"),
-            ),
-        ),
-    )
-    zeros = F.transform(col, lambda x: F.lit(0))
-    return F.when(s > 0, q).otherwise(zeros)
-
-
-def quantize_int8_arrow(a: ColumnOrName) -> Column:
-    """Arrow-kernel twin of ``quantize_int8`` that also emits the l2
-    norm: one vectorized numpy pass per batch returning
+def quantize_int8(a: ColumnOrName) -> Column:
+    """Symmetric int8 quantization of an embedding plus its l2 norm, as
+    one vectorized numpy pass per Arrow batch returning
     ``struct<l2_norm: double, q8: array<int>>``.
 
-    Same arithmetic contract as the expression path — per-row
-    dynamic-range scale max|x|, floor(x/scale*127 + 0.5) clamped to
-    [-127, 127], all in IEEE double — so both paths (and any SQL
-    oracle using the same formula) agree bit-for-bit; numpy just does
-    the identical elementwise double ops in one C loop. Preferred on
-    corpus-sized inputs: Catalyst interprets HOF lambdas per element
-    (~K*D ops/row on the expression path), while this kernel is one
-    matmul-shaped batch op (measured at sf0.1, 5000x64: expression
-    chain 1.07s end-to-end vs 0.26s Arrow)."""
+    Each element maps to floor(x / scale * 127 + 0.5) clamped to
+    [-127, 127], with ``scale`` the vector's max |x| (per-row dynamic
+    range); a zero vector quantizes to zeros. floor(+0.5) instead of
+    round() keeps the halfway rule identical in every engine (round()
+    half-even vs half-away differs), and all arithmetic is IEEE
+    double, so a SQL oracle using the same formula agrees
+    bit-for-bit. The Arrow kernel replaced a zip_with/transform
+    expression chain: Catalyst interprets HOF lambdas per element
+    (measured at sf0.1, 5000x64: expression chain 1.07s end-to-end vs
+    0.26s Arrow)."""
 
     @F.pandas_udf("struct<l2_norm: double, q8: array<int>>")
     def _quant(v):

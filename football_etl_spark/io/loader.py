@@ -8,15 +8,11 @@ StructType from ``schemas``.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, TimestampNTZType
 
 from ..schemas import TESTDATA, TESTDATA_TABLES
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # Timestamp columns the driver has generated as TIMESTAMP(NANOS) in some
 # rounds (Spark's vectorized reader rejects ns) and plain µs-NTZ in others.

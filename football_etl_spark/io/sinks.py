@@ -80,29 +80,6 @@ def write_bucketed(
     w.option("path", path).format("parquet").saveAsTable(table)
 
 
-def write_range_sorted(
-    df: DataFrame,
-    path: str,
-    range_cols: Sequence[str],
-    n_partitions: int | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Range-clustered sorted parquet layout: ``repartitionByRange``
-    globally orders partition boundaries by ``range_cols`` (sampled
-    range partitioner — no total sort), then each file is written
-    sorted within itself. Downstream scans filtering on the range
-    key prune to a few files via parquet min/max footer stats —
-    the layout that turns a 100 TB time/key-range query into a
-    handful-of-files read. The write costs exactly one shuffle."""
-    cols = [df[c] for c in range_cols]
-    rp = (
-        df.repartitionByRange(n_partitions, *cols)
-        if n_partitions
-        else df.repartitionByRange(*cols)
-    )
-    rp.sortWithinPartitions(*cols).write.mode(mode).parquet(path)
-
-
 def write_parquet_observed(
     df: DataFrame,
     path: str,
@@ -149,7 +126,8 @@ def write_zordered(
     mode: str = "overwrite",
 ) -> None:
     """Z-order (Morton-curve) clustered parquet layout — the
-    multi-dimensional generalization of :func:`write_range_sorted`.
+    multi-dimensional generalization of a range-sorted layout
+    (``repartitionByRange`` + ``sortWithinPartitions`` on one column).
 
     A single-column range sort gives tight min/max footer stats (and
     so file-level pruning) on its LEAD column only; a predicate on any
@@ -167,7 +145,7 @@ def write_zordered(
     JVM bitwise expressions (shift/and/or — whole-stage codegen, no
     UDF); then ``repartitionByRange`` + ``sortWithinPartitions`` on
     the key writes ``n_files`` z-contiguous files, exactly one
-    shuffle like the 1-D sink. ``len(cols) * bits`` must fit a long
+    shuffle like the 1-D layout. ``len(cols) * bits`` must fit a long
     (≤ 63). Nulls sort to z-bucket 0 (scaled via coalesce to the
     column minimum)."""
     from pyspark.sql import functions as F

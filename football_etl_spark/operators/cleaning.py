@@ -18,13 +18,6 @@ from pyspark.sql import types as T
 from ..functions.scalars import clean_number
 
 
-def validate_required(df: DataFrame, required: Sequence[str]) -> list[str]:
-    """Missing-column report (utils/data_utils.py:194-213). Pure
-    metadata; raises nothing — callers decide (reference logs + repairs)."""
-    have = set(df.columns)
-    return [c for c in required if c not in have]
-
-
 def add_missing_columns(
     df: DataFrame, defaults: Mapping[str, object], types: Mapping[str, T.DataType] | None = None
 ) -> DataFrame:

@@ -618,88 +618,16 @@ def simhash_signatures(
     id_col: str = "doc_id",
     text_col: str = "text",
     bits: int = 56,
-    use_arrow: bool = False,
 ) -> DataFrame:
     """Per-doc SimHash (first ``bits/4`` hex chars of each token's md5
     → per-bit ±1 votes → sign bits). Returns (id_col, simhash); docs
     with zero tokens are absent.
 
-    Default path: explode + ONE groupBy(id) with 56 codegen'd ±1 vote
-    sums (map-side partial agg, JVM md5) — measured 3.5× faster than
-    the Arrow variant at sf0.1 (5k docs), because JVM-native md5 beats
-    a Python hashlib loop and the 56-int-per-doc shuffle is small.
-
-    ``use_arrow=True`` computes the signature map-side per document in
-    a pandas UDF (no explode, no shuffle at all) with numpy
-    ``reduceat`` vote accumulation — bit-identical output (integer
-    math; tokenization mirrors functions/text.tokens down to Java
-    ``trim``/ASCII-``\\s`` semantics; int32 votes safe to 2^31 tokens
-    per doc). Reach for it when the shuffle, not CPU, is the binding
-    constraint — e.g. corpus passes where the 56-column aggregate
-    would spill — and benchmark: at tested scales the JVM path wins."""
-    if use_arrow:
-        nhex = bits // 4
-        n_bits = bits
-
-        @F.pandas_udf("long")
-        def _sig(texts):
-            import hashlib
-            import re
-
-            import numpy as np
-            import pandas as pd
-
-            # EXACT replica of the JVM path's tokenization
-            # (functions/text.tokens): SQL trim strips ONLY the space
-            # character 0x20, and split(\s+) with Java \s =
-            # [ \t\n\x0B\f\r] KEEPS empty edge tokens — so a doc with
-            # a leading tab contributes an '' token on both paths,
-            # and signatures stay bit-identical across variants.
-            ws = re.compile(r"[ \t\n\x0b\f\r]+")
-            shifts = np.arange(n_bits, dtype=np.uint64)
-            weights = np.uint64(1) << shifts
-
-            out: list[int | None] = []
-            CHUNK = 1024
-            vals = texts.tolist()
-            for start in range(0, len(vals), CHUNK):
-                chunk = vals[start : start + CHUNK]
-                tok_lists = []
-                for t in chunk:
-                    if t is None:
-                        tok_lists.append([])
-                        continue
-                    t2 = t.strip(" ")
-                    tok_lists.append(ws.split(t2) if t2 else [])
-                flat = [tok for toks_ in tok_lists for tok in toks_]
-                if not flat:
-                    out.extend([None] * len(chunk))
-                    continue
-                H = np.fromiter(
-                    (
-                        int(hashlib.md5(tok.encode("utf-8")).hexdigest()[:nhex], 16)
-                        for tok in flat
-                    ),
-                    dtype=np.uint64,
-                    count=len(flat),
-                )
-                B = ((H[:, None] >> shifts[None, :]) & np.uint64(1)).astype(np.int32)
-                contrib = 2 * B - 1
-                counts = np.asarray([len(t) for t in tok_lists])
-                bounds = np.concatenate(([0], np.cumsum(counts)[:-1]))
-                nonempty = counts > 0
-                votes = np.add.reduceat(contrib, bounds[nonempty], axis=0)
-                sigs = ((votes >= 0).astype(np.uint64) * weights).sum(axis=1)
-                it = iter(sigs.astype(np.int64).tolist())
-                out.extend(next(it) if ne else None for ne in nonempty)
-            return pd.Series(pd.array(out, dtype="Int64"))
-
-        return (
-            ensure_min_partitions(df.select(id_col, text_col))
-            .select(id_col, _sig(F.col(text_col)).alias("simhash"))
-            .filter(F.col("simhash").isNotNull())
-        )
-
+    Explode + ONE groupBy(id) with ``bits`` codegen'd ±1 vote sums
+    (map-side partial agg, JVM md5) — measured 3.5× faster than a
+    per-document pandas-UDF signature at sf0.1 (5k docs), because
+    JVM-native md5 beats a Python hashlib loop and the 56-int-per-doc
+    shuffle is small."""
     src = ensure_min_partitions(df.select(id_col, text_col))
     toks = src.select(id_col, F.explode(tokens(text_col)).alias("__tok"))
     # The hash is INLINED into the vote sums (pre-r12 form, restored

@@ -52,8 +52,8 @@ _NAME = T.StructType([T.StructField("name", T.StringType())])
 # is known to use, with the object-or-string fields (status, venue)
 # declared STRING so the parser preserves the raw fragment/scalar, and
 # roundInfo.round/id declared STRING to match the reference's
-# stringly-typed output. (schemas.API_EVENT stays the typed contract
-# for well-formed feeds.)
+# stringly-typed output. This is the engine's one declared contract
+# for the feed.
 _EVENT_PROBE = T.StructType(
     [
         T.StructField("id", T.StringType()),
@@ -142,8 +142,7 @@ def flatten_api_events(
       (daily_match_scraper.py:486-492).
 
     ONE from_json parse + codegen'd struct-field coalesces — no
-    shuffle, linear scan. (The declared contract for well-formed
-    feeds lives in ``schemas.API_EVENT``; ``_EVENT_PROBE`` is the
+    shuffle, linear scan. (``_EVENT_PROBE`` is the feed contract: the
     candidate-path superset with the object-or-string fields kept
     raw. See the module docstring for the measured comparison against
     the VARIANT-probe and double-parse formulations.)

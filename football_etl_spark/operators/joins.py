@@ -34,14 +34,6 @@ def lookup_join(
     return joined.withColumn(out, val).drop("__k", "__v")
 
 
-def prefix_columns(df: DataFrame, prefix: str, exclude: Sequence[str] = ()) -> DataFrame:
-    """Bulk prefixed rename (utils/data_utils.py:153-172) — a pure
-    projection, no shuffle."""
-    return df.select(
-        *[F.col(c).alias(c if c in exclude else f"{prefix}{c}") for c in df.columns]
-    )
-
-
 def enrich_home_away(
     fixtures: DataFrame,
     metrics: DataFrame,

@@ -1,7 +1,7 @@
 """Multimodal column plumbing — image/audio/video as opaque binary.
 
-The Spark-side contract is real and tested: binary payload columns
-with typed metadata structs, Arrow-batched ``mapInPandas`` operators
+The Spark-side contract is real and tested: binary payload columns,
+Arrow-batched ``mapInPandas`` operators
 with explicit output schemas, and partitioning that keeps large blobs
 from skewing tasks.
 
@@ -29,24 +29,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("payload", T.BinaryType(), True),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("mime", T.StringType()),
-                    T.StructField("n_bytes", T.LongType()),
-                    T.StructField("checksum", T.StringType()),
-                ]
-            ),
-            True,
-        ),
-    ]
-)
-
 DECODED_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),
@@ -56,22 +38,6 @@ DECODED_SCHEMA = T.StructType(
         T.StructField("features", T.ArrayType(T.FloatType()), True),
     ]
 )
-
-
-def attach_binary_payload(df: DataFrame, id_col: str, source_col: str, mime: str = "application/octet-stream") -> DataFrame:
-    """Wrap an existing column as a binary payload + metadata struct —
-    the ingest adapter that turns any bytes-like column into the
-    multimodal contract. Metadata derives JVM-side (no UDF)."""
-    payload = F.encode(F.col(source_col).cast("string"), "UTF-8")
-    return df.select(
-        F.col(id_col).cast("long").alias("media_id"),
-        payload.alias("payload"),
-        F.struct(
-            F.lit(mime).alias("mime"),
-            F.length(payload).cast("long").alias("n_bytes"),
-            F.md5(F.col(source_col).cast("string")).alias("checksum"),
-        ).alias("meta"),
-    )
 
 
 # One full 0..255 byte cycle as hex, repeated so any rotation of any
@@ -286,12 +252,12 @@ def decode_media(df: DataFrame) -> DataFrame:
 
 
 def sampled_frame_indices(every_n: int = 2) -> Column:
-    """Sampled frame indices as an ARRAY column over n_frames — the
-    shared core of sample_frames. Exposed as a column so a consumer
-    that only needs per-row facts (count of sampled frames, membership
-    tests) composes it into ONE decode pass instead of re-aggregating
-    an exploded relation — re-referencing a mapInPandas relation in a
-    self-join re-RUNS the Python decode stage per reference."""
+    """Sampled frame indices as an ARRAY column over n_frames
+    (0, every_n, 2·every_n, …). A column, not an exploded relation, so
+    a consumer that only needs per-row facts (count of sampled frames,
+    membership tests) composes it into ONE decode pass — re-referencing
+    a mapInPandas relation in a self-join re-RUNS the Python decode
+    stage per reference."""
     return F.sequence(F.lit(0), F.col("n_frames") - 1, F.lit(every_n))
 
 
@@ -299,31 +265,9 @@ def resized_features(out_dim: int = 4) -> Column:
     """'Resize' stand-in as a column: truncate/renormalize the feature
     vector with array expressions (slice + transform) — the real
     resize happens in the decoder; this demonstrates post-decode
-    vector surgery JVM-side. Shared core of resize_features."""
+    vector surgery JVM-side."""
     return F.transform(
         F.slice(F.col("features"), 1, out_dim), lambda x: x.cast("float")
-    )
-
-
-def sample_frames(decoded: DataFrame, every_n: int = 2) -> DataFrame:
-    """Frame sampling over decoded video metadata — pure column ops:
-    frame indices (sampled_frame_indices) exploded to one row per
-    sampled frame (bounded by n_frames, no blob duplication)."""
-    return (
-        decoded.filter(F.col("n_frames").isNotNull())
-        .select(
-            "media_id",
-            F.explode(sampled_frame_indices(every_n)).alias("frame_idx"),
-        )
-    )
-
-
-def resize_features(decoded: DataFrame, out_dim: int = 4) -> DataFrame:
-    """Relation form of resized_features for pipeline consumers that
-    carry the resized vectors forward."""
-    return decoded.filter(F.col("features").isNotNull()).select(
-        "media_id",
-        resized_features(out_dim).alias("features_resized"),
     )
 
 

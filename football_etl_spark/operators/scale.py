@@ -173,40 +173,3 @@ def key_skew_profile(
         .orderBy(F.desc("n"), F.asc(key_col))
         .limit(top_n)
     )
-
-
-def enable_runtime_bloom_filters(
-    df_session,
-    creation_side_max: str = "50MB",
-    application_side_min: str = "1GB",
-) -> None:
-    """Turn on Catalyst's runtime bloom-filter injection for big-big
-    joins — the row-level counterpart of broadcast pruning for joins
-    where BOTH sides are fact-scale.
-
-    When one side of a shuffle join carries a selective filter, the
-    optimizer builds a bloom filter over that side's join keys (size
-    bounded by ``creation_side_max``) and pushes a membership probe
-    into the OTHER side's scan, dropping non-joining rows before the
-    shuffle instead of after it. At 100 TB this is the difference
-    between shuffling the whole fact table and shuffling only the
-    ~matching fraction. ``application_side_min`` keeps the rewrite
-    away from small scans where the probe costs more than it saves.
-    Broadcast-able dims are unaffected (broadcast already beats a
-    bloom probe); this targets the orders⋈lineitem shape where the
-    filtered side is selective but above the broadcast threshold.
-
-    Off by default in the engine session because the bench corpus is
-    entirely broadcast-territory; a cluster deployment calls this once
-    at session setup. tests/test_scale.py asserts the injection
-    actually fires on the selective fact-fact shape."""
-    spark = df_session if not isinstance(df_session, DataFrame) else df_session.sparkSession
-    spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-    spark.conf.set(
-        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
-        creation_side_max,
-    )
-    spark.conf.set(
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-        application_side_min,
-    )

@@ -41,8 +41,8 @@ from .scale import ensure_min_partitions
 def _pair_cosine(qv: str, cv: str, qn: str, cn: str) -> Column:
     """Cosine from a pair's dot product and the two PREcomputed norms
     (one norm per vector instead of one per pair — the norms of an
-    N×M scoring job cost N+M instead of 2·N·M). Same expression shape
-    as functions.vectors.cosine, so values are identical."""
+    N×M scoring job cost N+M instead of 2·N·M). Zero-norm pairs score
+    0.0."""
     d = F.col(qn) * F.col(cn)
     return F.when(d > 0, dot(qv, cv) / d).otherwise(F.lit(0.0))
 
@@ -93,44 +93,18 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     return rng.standard_normal((n_planes, dim)).tolist()
 
 
-def lsh_bucket(
-    df: DataFrame, vec_col: str, planes: list[list[float]], use_arrow: bool | None = None
-) -> DataFrame:
-    """Sign-bit bucket id from dot products with fixed hyperplanes.
+def lsh_bucket(df: DataFrame, vec_col: str, planes: list[list[float]]) -> DataFrame:
+    """Sign-bit bucket id from dot products with fixed hyperplanes: one
+    Arrow-batched pandas UDF whose whole batch of sign bits comes from
+    a single float64 matmul (N×D @ D×B). A literal-tree expression
+    form (per-plane ``dot`` over array literals; Catalyst interprets
+    HOF lambdas per element) measured slower inside the full top-k
+    query: 1.75 s vs 1.14 s, because the big literal tree is
+    re-analyzed and re-evaluated across the join.
 
-    Default (``use_arrow=None`` → Arrow): one Arrow-batched pandas
-    UDF — the whole batch's sign bits come from a single float64
-    matmul (N×D @ D×B), the vectorized map-side design that holds at
-    100 TB (no shuffle, no per-element interpretation). The
-    interpreted-expression fallback (``use_arrow=False``; Catalyst
-    does not codegen HOF lambdas) wins in an ISOLATED micro-benchmark
-    on a 5k-vector corpus (0.18s vs 0.55s — the Arrow stage's fixed
-    Python round-trip dominates below ~10-20k rows/task), but
-    measured SLOWER inside the full top-k query at the same scale
-    (1.75s vs 1.14s: the big literal tree is re-analyzed and
-    re-evaluated across the join), so it is kept only for UDF-free
-    environments, not auto-selected. Both figures were measured with
-    stock PySpark workers, whose every task re-read each zip on
-    ``sys.path`` before it started (0.1-0.25 s of CPU, Python <
-    3.13); that per-task cost is part of the "fixed round-trip" above.
-    The engine's local-master worker daemon (``worker_daemon``)
-    removes it, so the break-even row count is lower than stated.
-
-    Both paths accumulate in float64; a sign flip between matmul and
-    sequential order needs |dot| ≲ 1e-13·‖v‖ — vanishingly rare for
-    gaussian hyperplanes (and the seeded planes are fixed, so bucket
-    ids stay deterministic for a given corpus either way).
-    """
-    if use_arrow is None:
-        use_arrow = True
-    if not use_arrow:
-        bucket = F.lit(0).cast("long")
-        for i, plane in enumerate(planes):
-            p = F.array(*[F.lit(float(x)) for x in plane])
-            bit = (dot(F.col(vec_col), p) > 0).cast("long")
-            bucket = bucket + bit * F.lit(2**i).cast("long")
-        return df.withColumn("__bucket", bucket)
-
+    The matmul accumulates in float64; its sign differs from a
+    sequential sum (the DuckDB oracle's ``_sql_lsh_bucket``) only when
+    |dot| ≲ 1e-13·‖v‖, vanishingly rare for gaussian hyperplanes."""
     planes_list = [[float(x) for x in p] for p in planes]
 
     @F.pandas_udf("long")

@@ -167,59 +167,6 @@ def approx_group_percentiles(
     return out.select(*cols)
 
 
-def equi_depth_bins_approx(
-    df: DataFrame,
-    value_col: str,
-    group_col: str,
-    n_bins: int = 4,
-    accuracy: int = 10000,
-) -> DataFrame:
-    """The 100 TB form of per-group equi-depth histogram binning (the
-    scale path named by the exact `equi_depth_histogram` entry's
-    caveat): exact NTILE sorts EVERY group through one reducer —
-    parallelism capped at the group count — so at scale the bin EDGES
-    come from one approx_percentile pass (GK summaries, map-side
-    partial-combined, no per-group sort) and a second map-side pass
-    buckets each row against its group's broadcast edge array and
-    counts exactly.
-
-    Output: (grp, bin 1..n_bins, n, lo, hi) — same shape as the exact
-    entry; populations are approximately equal (within the sketch's
-    rank error) instead of exactly equal, and every row is counted
-    exactly once (bin assignment is a total, deterministic rule:
-    first edge >= value, ties to the lower bin like NTILE's ordering).
-    Both passes parallelize with the data, not the group count."""
-    qs = tuple(i / n_bins for i in range(1, n_bins))
-    edges = df.groupBy(F.col(group_col).alias("grp")).agg(
-        F.approx_percentile(
-            value_col, F.array(*[F.lit(q) for q in qs]), F.lit(accuracy)
-        ).alias("__edges")
-    )
-    j = df.select(F.col(group_col).alias("grp"), F.col(value_col).alias("__v")).join(
-        F.broadcast(edges), "grp"
-    )
-    # bin = 1 + number of edges strictly below the value — total and
-    # deterministic for every input, NULL edges cannot occur (groups
-    # in `edges` by construction have >= 1 row)
-    bin_col = (
-        F.lit(1)
-        + F.aggregate(
-            "__edges",
-            F.lit(0),
-            lambda acc, e: acc + F.when(F.col("__v") > e, 1).otherwise(0),
-        )
-    ).cast("int")
-    return (
-        j.select("grp", "__v", bin_col.alias("bin"))
-        .groupBy("grp", "bin")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.round(F.min("__v"), 6).alias("lo"),
-            F.round(F.max("__v"), 6).alias("hi"),
-        )
-    )
-
-
 def approx_top_keys(
     df: DataFrame,
     key_col: str,

@@ -2262,8 +2262,7 @@ _PGM_PX8_SQL = " + ".join(f"((doc_id % 256 + {i}) % 256)" for i in range(8))
 def multimodal_decode(spark, sf_dir):
     # ONE decode pass: frame-sample count and resized-feature dim are
     # per-row facts, so they compose as columns (sampled_frame_indices
-    # / resized_features — the same expressions sample_frames and
-    # resize_features explode/carry) instead of re-aggregating the
+    # / resized_features) instead of exploding and re-aggregating the
     # decoded relation. The previous join-back shape re-RAN the Python
     # decode stage 3x: a mapInPandas subtree referenced on both sides
     # of a self-join is recomputed per reference (measured 0.94s ->
@@ -3263,15 +3262,15 @@ def pii_redacted_docs(spark, sf_dir):
     "for ANN candidate generation; float column stays for exact "
     "re-rank): per-vector dynamic-range scale, floor(+0.5) halfway "
     "rule so every engine rounds identically "
-    "(functions/vectors.quantize_int8); plus the l2 norm. Emitted "
-    "LONG-FORM (vec_id, l2_norm, pos, q8) — one row per quantized "
-    "component — the harness-hashable shape; the packed array<int> "
-    "stays available via vectors.quantize_int8 for in-plan use",
+    "(functions/vectors.quantize_int8, one Arrow pass that also emits "
+    "the l2 norm). Emitted LONG-FORM (vec_id, l2_norm, pos, q8) — one "
+    "row per quantized component — the harness-hashable shape; the "
+    "packed array<int> is the kernel's q8 field",
 )
 def quantized_embeddings(spark, sf_dir):
     e = _t(spark, sf_dir, "embeddings")
     return (
-        e.select("vec_id", vectors.quantize_int8_arrow("embedding").alias("s"))
+        e.select("vec_id", vectors.quantize_int8("embedding").alias("s"))
         .select(
             "vec_id",
             F.round(F.col("s.l2_norm"), 6).alias("l2_norm"),
@@ -4722,7 +4721,8 @@ def messy_header_normalization(spark, sf_dir):
     "(SURVEY §2.1 rows 1-2, the reference's fixed-field DictWriter "
     "contract at daily_match_scraper.py:543-548): write the projected "
     "orders table through sinks.write_csv (fixed column order, "
-    "header), re-read with an explicit StructType (no inference), "
+    "header), re-read through io.loader.read_csv with an explicit "
+    "StructType (no inference), "
     "return the round-tripped rows. Doubles are 2dp-rounded before "
     "the write so text rendering is exact in both engines; a "
     "hash-equal result proves the sink/scan pair is lossless",
@@ -4738,7 +4738,7 @@ def csv_round_trip_orders(spark, sf_dir):
 
     from pyspark.sql import types as T
 
-    from ..io import sinks
+    from ..io import loader, sinks
 
     o = _t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_orderpriority",
@@ -4754,7 +4754,7 @@ def csv_round_trip_orders(spark, sf_dir):
             T.StructField("total_2dp", T.DoubleType()),
         ]
     )
-    return spark.read.schema(schema).option("header", True).csv(path)
+    return loader.read_csv(spark, path, schema)
 
 
 @query(
@@ -4767,7 +4767,8 @@ def csv_round_trip_orders(spark, sf_dir):
     "(SURVEY §2.1 rows 4-5, the reference's per-team JSON cache at "
     "team_scraper.py:89-126): project documents (unicode text with "
     "newlines/quotes — the JSON escaping torture case), write through "
-    "sinks.write_json, re-read with an explicit StructType, return "
+    "sinks.write_json, re-read through io.loader.read_json with an "
+    "explicit StructType, return "
     "the round-tripped rows; hash-equal against the source proves "
     "the JSON escape/parse cycle is lossless",
 )
@@ -4778,7 +4779,7 @@ def json_round_trip_documents(spark, sf_dir):
 
     from pyspark.sql import types as T
 
-    from ..io import sinks
+    from ..io import loader, sinks
 
     d = _t(spark, sf_dir, "documents").select(
         "doc_id", "lang", F.length("text").alias("text_chars"), "text"
@@ -4793,7 +4794,7 @@ def json_round_trip_documents(spark, sf_dir):
             T.StructField("text", T.StringType()),
         ]
     )
-    return spark.read.schema(schema).json(path)
+    return loader.read_json(spark, path, schema)
 
 
 @query(
@@ -8713,11 +8714,10 @@ def attribution_first_touch(spark, sf_dir):
     "BENCH_NOTES x100): parallelism is capped at the GROUP COUNT — "
     "exact equal-population binning sorts each group through one "
     "reducer, so 5 priorities = 5 tasks however large the table. The "
-    "100 TB path is implemented: operators/sketches."
-    "equi_depth_bins_approx — approx_percentile bin EDGES (mergeable "
-    "GK partials) + an exact map-side bucket count, both passes "
-    "parallelizing with the data, pytest-certified within 10% of "
-    "perfect depth; the entry keeps the exact form because it is what "
+    "scale form would take approx_percentile bin EDGES (mergeable GK "
+    "partials) + an exact map-side bucket count, both passes "
+    "parallelizing with the data; the entry keeps the exact form "
+    "because it is what "
     "the oracle gate certifies bit-for-bit. Portable SQL — runs "
     "unmodified on both engines",
 )

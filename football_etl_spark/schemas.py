@@ -8,8 +8,7 @@ layer (operators/cleaning.py) reconciles dirty input *to* these
 contracts with pure DataFrame transforms.
 
 Two families:
-- reference-domain tables (fixtures / team_history / matches) per
-  /root/repo/FIXTURES.md;
+- reference-domain tables (fixtures / team_history) per FIXTURES.md;
 - the driver's synthetic TPC-H-ish testdata tables (TESTDATA.md),
   used by the query registry and benchmarks.
 """
@@ -19,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import types as T
 
 # --------------------------------------------------------------------------
-# Reference-domain schemas (FIXTURES.md §1-3)
+# Reference-domain schemas (FIXTURES.md §1-2)
 # --------------------------------------------------------------------------
 
 FIXTURES = T.StructType(
@@ -53,69 +52,6 @@ TEAM_HISTORY = T.StructType(
         T.StructField("away_team", T.StringType(), True),
         T.StructField("match_id", T.StringType(), True),
         T.StructField("match_url", T.StringType(), True),
-    ]
-)
-
-# optional per-match detail stats (sparsely populated, FIXTURES.md §2)
-TEAM_HISTORY_DETAIL_COLS = [
-    "xg", "xg_against", "possession", "total_passes", "pass_completion",
-    "shots", "shots_on_target", "corners", "fouls_committed",
-    "yellow_cards", "red_cards",
-]
-
-MATCHES = T.StructType(
-    [
-        T.StructField("date", T.DateType(), True),
-        T.StructField("id", T.StringType(), True),
-        T.StructField("home_team", T.StringType(), True),
-        T.StructField("away_team", T.StringType(), True),
-        T.StructField("league", T.StringType(), True),
-        T.StructField("country", T.StringType(), True),
-        T.StructField("start_timestamp", T.LongType(), True),
-        T.StructField("start_time", T.StringType(), True),
-        T.StructField("status", T.StringType(), True),
-        T.StructField("venue", T.StringType(), True),
-        T.StructField("round", T.StringType(), True),
-        T.StructField("source", T.StringType(), True),
-    ]
-)
-
-# Nested ingest shape of the upstream JSON feed
-# (/root/reference/sofascore_data/raw/api_response_2025-05-23.txt,
-# navigated at /root/reference/daily_match_scraper.py:449-527).
-# Includes every CANDIDATE path the reference probes — primary
-# (homeTeam/awayTeam/tournament) plus the fallbacks (home/away,
-# top-level category, league) — so one from_json pass feeds the whole
-# coalesce chain in operators/ingest.flatten_api_events. Fields the
-# feed sometimes sends as a bare string instead of an object (status,
-# venue) keep their object form here; the string variant is recovered
-# from the raw JSON beside the parse (a StructType field nulls out on
-# a scalar payload).
-_NAME_STRUCT = T.StructType([T.StructField("name", T.StringType())])
-
-API_EVENT = T.StructType(
-    [
-        T.StructField("id", T.LongType(), True),
-        T.StructField("homeTeam", _NAME_STRUCT, True),
-        T.StructField("awayTeam", _NAME_STRUCT, True),
-        T.StructField("home", _NAME_STRUCT, True),
-        T.StructField("away", _NAME_STRUCT, True),
-        T.StructField(
-            "tournament",
-            T.StructType(
-                [
-                    T.StructField("name", T.StringType()),
-                    T.StructField("category", _NAME_STRUCT),
-                ]
-            ),
-            True,
-        ),
-        T.StructField("category", _NAME_STRUCT, True),
-        T.StructField("league", _NAME_STRUCT, True),
-        T.StructField("roundInfo", T.StructType([T.StructField("round", T.IntegerType())]), True),
-        T.StructField("status", T.StructType([T.StructField("description", T.StringType())]), True),
-        T.StructField("startTimestamp", T.LongType(), True),
-        T.StructField("venue", _NAME_STRUCT, True),
     ]
 )
 
@@ -218,8 +154,3 @@ TESTDATA = {
 }
 
 TESTDATA_TABLES = tuple(TESTDATA)
-
-# Small dimension tables that should always broadcast in joins.
-BROADCAST_TABLES = frozenset(
-    {"region", "nation", "supplier", "part", "customer", "documents", "embeddings"}
-)

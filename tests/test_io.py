@@ -90,28 +90,6 @@ def test_csv_round_trip_reference_fixtures_schema(spark):
         )
 
 
-def test_write_range_sorted_prunes_and_sorts(spark, tmp_path):
-    from football_etl_spark.io import sinks
-
-    df = spark.range(0, 10000).selectExpr("id", "id % 7 AS v")
-    out = str(tmp_path / "ranged")
-    sinks.write_range_sorted(df, out, ["id"], n_partitions=8)
-    back = spark.read.parquet(out)
-    assert back.count() == 10000
-    # range clustering: each file's id span is disjoint → a narrow
-    # id filter touches 1 file (check via per-file min/max)
-    import pyspark.sql.functions as F
-    spans = (
-        back.select("id", F.input_file_name().alias("f"))
-        .groupBy("f").agg(F.min("id").alias("lo"), F.max("id").alias("hi"))
-        .collect()
-    )
-    assert len(spans) == 8
-    ordered = sorted([(r["lo"], r["hi"]) for r in spans])
-    for (lo1, hi1), (lo2, hi2) in zip(ordered, ordered[1:]):
-        assert hi1 < lo2  # disjoint ranges → footer-stat pruning works
-
-
 def test_write_parquet_observed_collects_metrics_in_one_pass(spark, tmp_path):
     import pyspark.sql.functions as F
     from football_etl_spark.io import sinks
@@ -212,7 +190,7 @@ def test_zordered_layout_prunes_on_every_dimension(spark, tmp_path):
     )
     zdir, ldir = str(tmp_path / "zord"), str(tmp_path / "linear")
     sinks.write_zordered(df, zdir, cols=("x", "y"), bits=10, n_files=16)
-    sinks.write_range_sorted(df, ldir, range_cols=("x",), n_partitions=16)
+    df.repartitionByRange(16, "x").sortWithinPartitions("x").write.parquet(ldir)
 
     def files_admitting(path, col, lo, hi):
         import os

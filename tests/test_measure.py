@@ -13,6 +13,8 @@ from tools.measure import ALPHA, KEY_COLS, OFFSET, duckdb_views, replicate
 
 from .conftest import SF_SMOKE
 
+SF_0_01 = os.path.join(os.path.dirname(SF_SMOKE), "sf0.01")
+
 pytestmark = pytest.mark.skipif(not os.path.isdir(SF_SMOKE), reason="no sf0.001 testdata")
 
 
@@ -72,3 +74,12 @@ def test_duckdb_views_read_directory_output(spark, x2):
         for t in TESTDATA_TABLES:
             (n,) = con.execute(f"SELECT count(*) FROM {t}").fetchone()
             assert n == spark.read.parquet(f"{x2}/{t}.parquet").count(), t
+
+
+@pytest.mark.skipif(not os.path.isdir(SF_0_01), reason="no sf0.01 testdata")
+def test_replica_rebuilds_when_the_source_changes(spark, tmp_path):
+    out = str(tmp_path / "x2")
+    replicate(spark, SF_SMOKE, out, 2, OFFSET)
+    replicate(spark, SF_0_01, out, 2, OFFSET)
+    n_src = spark.read.parquet(f"{SF_0_01}/orders.parquet").count()
+    assert spark.read.parquet(f"{out}/orders.parquet").count() == 2 * n_src

@@ -23,7 +23,6 @@ def test_canonicalize_and_repair(spark):
     out2 = cleaning.add_missing_columns(out, {"venue": None, "other": "IGNORED"})
     assert "venue" in out2.columns
     assert out2.collect()[0]["other"] == "x"  # existing column untouched
-    assert cleaning.validate_required(out2, ["date", "missing_col"]) == ["missing_col"]
 
 
 def test_flatten_header(spark):
@@ -82,11 +81,6 @@ def test_lookup_join_defaults(spark):
     out = joins.lookup_join(df, dim, "team", "alias", "canonical", out_col="norm")
     got = dict((r["team"], r["norm"]) for r in out.collect())
     assert got == {"Man United": "Manchester United", "Arsenal": "Arsenal"}
-
-
-def test_prefix_columns(spark):
-    df = spark.createDataFrame([(1, 2)], ["a", "b"])
-    assert joins.prefix_columns(df, "home_", exclude=["a"]).columns == ["a", "home_b"]
 
 
 # ---------------------------------------------------------------- windows
@@ -179,9 +173,13 @@ def test_vectors_and_lsh_topk(spark):
         [(0, [1.0, 0.0]), (1, [0.9, 0.1]), (2, [-1.0, 0.0])],
         "vec_id long, embedding array<float>",
     )
-    d = df.select(vectors.cosine(F.col("embedding"), F.array(F.lit(1.0), F.lit(0.0))).alias("c"))
-    cs = [r["c"] for r in d.collect()]
-    assert cs[0] == pytest.approx(1.0) and cs[2] == pytest.approx(-1.0)
+    d = df.select(
+        vectors.dot(F.col("embedding"), F.array(F.lit(1.0), F.lit(0.0))).alias("d"),
+        vectors.norm("embedding").alias("n"),
+    )
+    ds = [(r["d"], r["n"]) for r in d.orderBy("d", ascending=False).collect()]
+    assert ds[0] == (pytest.approx(1.0), pytest.approx(1.0))
+    assert ds[2] == (pytest.approx(-1.0), pytest.approx(1.0))
 
     exact = similarity.cosine_topk(df, df.filter("vec_id = 0"), k=1)
     assert exact.collect()[0]["neighbor_id"] == 1
@@ -197,20 +195,22 @@ def test_vectors_and_lsh_topk(spark):
 
 def test_multimodal_pipeline(spark):
     docs = spark.createDataFrame([(1, "hello"), (2, "world")], ["doc_id", "text"])
-    media = multimodal.attach_binary_payload(docs, "doc_id", "text", mime="text/plain")
-    assert [f.name for f in media.schema] == ["media_id", "payload", "meta"]
-    meta = media.select("meta.n_bytes", "meta.mime").collect()
-    assert meta[0]["n_bytes"] == 5 and meta[0]["mime"] == "text/plain"
+    media = docs.select(
+        F.col("doc_id").cast("long").alias("media_id"),
+        F.encode("text", "UTF-8").alias("payload"),
+    )
 
     decoded = multimodal.decode_media(media)
     rows = {r["media_id"]: r for r in decoded.collect()}
     assert len(rows) == 2
     assert rows[1]["width"] >= 16 and len(rows[1]["features"]) == 8
 
-    frames = multimodal.sample_frames(decoded, every_n=2)
-    assert frames.count() >= 2
-    resized = multimodal.resize_features(decoded, out_dim=4)
-    assert all(len(r["features_resized"]) == 4 for r in resized.collect())
+    per_row = decoded.select(
+        F.size(multimodal.sampled_frame_indices(every_n=2)).alias("n_sampled"),
+        multimodal.resized_features(out_dim=4).alias("features_resized"),
+    ).collect()
+    assert sum(r["n_sampled"] for r in per_row) >= 2
+    assert all(len(r["features_resized"]) == 4 for r in per_row)
 
 
 def test_pgm_render_decode_round_trip(spark):
@@ -373,11 +373,32 @@ def test_weighted_hash_sample_respects_weights(spark):
     assert {r["doc_id"] for r in again.collect()} == {r["doc_id"] for r in kept.collect()}
 
 
+def _simhash_reference(text: str | None, bits: int = 56) -> int | None:
+    """Pure-Python SimHash with the JVM path's semantics: SQL ``trim``
+    strips only the space character 0x20; ``split`` on Java ``\\s+``
+    (``[ \\t\\n\\x0B\\f\\r]``) keeps empty edge tokens; each token
+    hashes to the first ``bits/4`` hex chars of its md5; each bit
+    votes ±1 and a non-negative sum sets it. None when there is no
+    token."""
+    import hashlib
+    import re
+
+    if text is None or not text.strip(" "):
+        return None
+    toks = re.split(r"[ \t\n\x0b\f\r]+", text.strip(" "))
+    votes = [0] * bits
+    for tok in toks:
+        h = int(hashlib.md5(tok.encode("utf-8")).hexdigest()[: bits // 4], 16)
+        for b in range(bits):
+            votes[b] += 1 if (h >> b) & 1 else -1
+    return sum(1 << b for b in range(bits) if votes[b] >= 0)
+
+
 def test_simhash_arrow_jvm_bit_parity(spark):
-    """The Arrow map-side SimHash variant must be BIT-IDENTICAL to the
-    default JVM expression path — including whitespace edge cases
-    (leading/trailing tabs and newlines produce empty edge tokens on
-    the JVM path, whitespace-only docs tokenize by kind)."""
+    """The JVM explode-and-vote SimHash must be BIT-IDENTICAL to an
+    independent pure-Python reference — including whitespace edge
+    cases (leading/trailing tabs and newlines produce empty edge
+    tokens, whitespace-only docs tokenize by kind)."""
     from football_etl_spark.operators import dedup as dd
 
     docs = [
@@ -392,12 +413,12 @@ def test_simhash_arrow_jvm_bit_parity(spark):
     ]
     df = spark.createDataFrame(docs, "doc_id long, text string")
     jvm = {r["doc_id"]: r["simhash"] for r in dd.simhash_signatures(df).collect()}
-    arrow = {
-        r["doc_id"]: r["simhash"]
-        for r in dd.simhash_signatures(df, use_arrow=True).collect()
-    }
-    assert jvm == arrow
-    assert 6 not in jvm and 8 not in jvm  # both paths drop token-less docs
+    ref = {d: _simhash_reference(t) for d, t in docs}
+    assert jvm == {d: h for d, h in ref.items() if h is not None}
+    assert 6 not in jvm and 8 not in jvm  # token-less docs are absent
+    # the edge-token cases really differ from their trimmed twins
+    assert jvm[2] != _simhash_reference("hello world")
+    assert jvm[3] != _simhash_reference("hello world")
 
 
 def test_weighted_hash_sample_clamps_out_of_range(spark):
@@ -1313,40 +1334,6 @@ def test_unigram_logprob_scores_values(spark):
     assert abs(out[1]["mean_logprob"] - round((2 * lp_a + lp_b) / 3, 6)) < 1e-9
     assert out[2]["n_tokens"] == 0
     assert out[2]["logprob"] is None and out[2]["mean_logprob"] is None
-
-
-def test_equi_depth_bins_approx_properties(spark):
-    """The scale-path histogram (approx edges + exact bucket counts)
-    must: count every row exactly once, keep bins ordered and
-    non-overlapping per group, and land within 10% relative population
-    error of perfect equi-depth on the real orders table."""
-    from football_etl_spark.io.loader import load_table
-    from football_etl_spark.operators import sketches
-
-    from .conftest import SF_SMOKE
-
-    o = load_table(spark, SF_SMOKE, "orders")
-    total = o.count()
-    out = sketches.equi_depth_bins_approx(
-        o, "o_totalprice", "o_orderpriority", n_bins=4
-    ).collect()
-    assert sum(r["n"] for r in out) == total  # every row exactly once
-    by_grp = {}
-    for r in out:
-        by_grp.setdefault(r["grp"], []).append(r)
-    group_sizes = {
-        r["o_orderpriority"]: r["cnt"]
-        for r in o.groupBy("o_orderpriority").agg(
-            F.count(F.lit(1)).alias("cnt")).collect()
-    }
-    for g, rows in by_grp.items():
-        rows.sort(key=lambda r: r["bin"])
-        assert [r["bin"] for r in rows] == list(range(1, len(rows) + 1))
-        for a, b in zip(rows, rows[1:]):
-            assert a["hi"] <= b["lo"]  # ordered, non-overlapping
-        ideal = group_sizes[g] / 4
-        for r in rows:
-            assert abs(r["n"] - ideal) <= max(2.0, 0.1 * ideal), (g, r)
 
 
 def test_grouped_zscore_matches_window_twin(spark):

@@ -125,46 +125,6 @@ def test_results_invariant_to_shuffle_partition_count(spark):
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
-def test_runtime_bloom_filter_fires_on_selective_fact_fact_join(spark):
-    """enable_runtime_bloom_filters: on a big-big join whose one side
-    carries a selective filter (the orders⋈lineitem shape above the
-    broadcast threshold), Catalyst must inject a bloom-filter probe
-    into the other side's subtree — row-level pre-shuffle pruning."""
-    from football_etl_spark.operators.scale import enable_runtime_bloom_filters
-
-    from .conftest import SF_SMOKE
-
-    prev = {
-        k: spark.conf.get(k, None)
-        for k in (
-            "spark.sql.optimizer.runtime.bloomFilter.enabled",
-            "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
-            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-            "spark.sql.autoBroadcastJoinThreshold",
-        )
-    }
-    try:
-        enable_runtime_bloom_filters(spark, application_side_min="0")
-        # force the shuffle-join regime the helper targets (the test
-        # corpus is broadcast-sized; a cluster fact table is not)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        from football_etl_spark.io.loader import load_table
-
-        o = load_table(spark, SF_SMOKE, "orders").filter(
-            "o_orderpriority = '1-URGENT'"
-        )
-        li = load_table(spark, SF_SMOKE, "lineitem")
-        j = li.join(o, li.l_orderkey == o.o_orderkey)
-        plan = j._jdf.queryExecution().optimizedPlan().toString()
-        assert "bloom" in plan.lower(), plan[:2000]
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-
-
 PARTITION_SENSITIVE = [
     # entries whose plans involve Arrow kernels, driver-side training
     # state, or segment-key fan-out (first held to this bar as staged

@@ -105,10 +105,23 @@ QUERIES = [
 X1000_QUERIES = ["text_quality_stats", "pricing_summary", "flagship_order_enrichment"]
 
 
+def _read(path: str) -> str | None:
+    if not os.path.exists(path):
+        return None
+    with open(path) as f:
+        return f.read()
+
+
 def replicate(spark, src: str, out: str, reps: int, offset: int, rotate_vectors: bool = True) -> str:
     """Write ``reps`` semantics-preserving copies of each table in
-    ``src`` to ``out`` (skipped when ``out/_DONE`` exists). This is
-    measurement data, not oracle data.
+    ``src`` to ``out``. This is measurement data, not oracle data.
+
+    - ``out/_DONE`` records the recipe: the resolved ``src`` (with its
+      own ``_DONE`` when it is a replica), ``reps``, ``offset`` and
+      ``rotate_vectors``. Generation is skipped only when the recorded
+      recipe equals this call's, so switching $SPARK_GRAFT_SF_DIR
+      rebuilds the replica instead of reusing one made from another
+      source.
 
     - Every key column of replica ``rep`` is shifted by ``rep * offset``,
       so joins and group-bys keep their per-key cardinalities: 10x data
@@ -126,8 +139,21 @@ def replicate(spark, src: str, out: str, reps: int, offset: int, rotate_vectors:
     - Dimension tables (region, nation) stay single-copy, like a
       warehouse growing its facts.
     """
-    if os.path.exists(f"{out}/_DONE"):
+    done = f"{out}/_DONE"
+    recipe = json.dumps(
+        {
+            "src": os.path.realpath(src),
+            "src_recipe": _read(f"{src}/_DONE"),
+            "reps": reps,
+            "offset": offset,
+            "rotate_vectors": rotate_vectors,
+        },
+        sort_keys=True,
+    )
+    if _read(done) == recipe:
         return out
+    if os.path.exists(done):  # a half-rebuilt replica must not match its old recipe
+        os.remove(done)
     os.makedirs(out, exist_ok=True)
     for t in TESTDATA_TABLES:
         df = spark.read.parquet(f"{src}/{t}.parquet")
@@ -152,7 +178,8 @@ def replicate(spark, src: str, out: str, reps: int, offset: int, rotate_vectors:
                 df = df.unionByName(p)
         df.write.mode("overwrite").parquet(f"{out}/{t}.parquet")
         print(f"generated {out}/{t}.parquet", file=sys.stderr, flush=True)
-    open(f"{out}/_DONE", "w").close()
+    with open(done, "w") as f:
+        f.write(recipe)
     return out
 
 
