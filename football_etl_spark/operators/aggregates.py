@@ -2,7 +2,7 @@
 
 All are single groupBy/agg passes — Catalyst plans partial (map-side)
 aggregation automatically, so these are shuffle-light at scale. The
-observability aggregates (null counts, completion, duplicate counts)
+observability aggregates (completion, column profiles, rule checks)
 reproduce the reference's validation/stats surface
 (utils/data_utils.py:194-235, pipeline.py:103-118) as ONE pass over
 the table instead of pandas' repeated full scans.
@@ -12,7 +12,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Row
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -43,19 +43,6 @@ def distinct_union(df: DataFrame, col_a: str, col_b: str, out: str) -> DataFrame
         .unionByName(df.select(F.col(col_b).alias(out)))
         .distinct()
     )
-
-
-def table_stats(df: DataFrame, key_cols: Sequence[str], distinct_cols: Sequence[str]) -> Row:
-    """The pipeline_stats dict (pipeline.py:103-113) as one agg pass:
-    row count, duplicate count on the key, count-distinct per listed
-    column. Returns a single collected Row (driver-side by design —
-    it is the job summary, not a data path)."""
-    aggs = [
-        F.count("*").alias("n_rows"),
-        (F.count("*") - F.count_distinct(*[F.col(k) for k in key_cols])).alias("n_duplicates"),
-    ]
-    aggs += [F.count_distinct(c).alias(f"n_{c}") for c in distinct_cols]
-    return df.agg(*aggs).collect()[0]
 
 
 def profile_columns(

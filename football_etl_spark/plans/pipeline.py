@@ -4,8 +4,11 @@ Mirrors /root/reference/pipeline.py:61-100 (extract fixtures →
 process fixtures → extract history → process history → join & load),
 minus the acquisition layer (HTTP/Selenium is an ingest concern, out
 of engine scope — SURVEY.md §3.1). Every stage is DataFrame→DataFrame
-and therefore also SQL-visible via temp views; nothing materializes
-until a sink action.
+and therefore also SQL-visible via temp views. The stages up to the
+join stay lazy; the terminal stage (``join_data``) materializes once,
+because the load stage reads it three times (parquet sink, CSV sink,
+completion stat) and a lazy frame would re-run the whole transform
+DAG for each.
 """
 
 from __future__ import annotations
@@ -137,6 +140,14 @@ def join_data(
     asof=True (default): join each side's *latest* metrics — 1:1,
     broadcast, the semantically-intended form. asof=False: the
     reference-faithful m:n fan-out over every (team, date) metric row.
+
+    The output comes back materialized by ``localCheckpoint()``: one
+    job runs the scans, dedup, windows, broadcasts and the final range
+    sort, and every later reader (the sinks, ``pipeline_stats``) reads
+    the checkpointed blocks with its lineage cut. The trade-off: the
+    blocks are executor-local, so they are not recomputed if an
+    executor is lost (the reader fails instead), and they are freed
+    only when the returned DataFrame is garbage-collected.
     """
     m = latest_team_metrics(metrics) if asof else metrics
     enriched = joins.enrich_home_away(
@@ -147,25 +158,32 @@ def join_data(
             }
         ),
         m.withColumn("team_norm", scalars.strip_team_suffix("team")).drop("team"),
-        # the reference's metrics domain is per-TEAM (~20 entities) —
-        # bounded, so the forced broadcast is sanctioned here
+        # the metrics domain is one row per team (200 teams in the
+        # football benchmark) — bounded, so the forced broadcast is
+        # sanctioned here
         broadcast_metrics=True,
     )
-    return enriched.drop("home_team_norm", "away_team_norm").orderBy("date")
+    return (
+        enriched.drop("home_team_norm", "away_team_norm").orderBy("date").localCheckpoint()
+    )
 
 
 def pipeline_stats(fixtures: DataFrame, history: DataFrame, output: DataFrame) -> dict:
-    """The run-summary stats dict (pipeline.py:103-118) — each table
-    summarized in one aggregation pass."""
-    fx = aggregates.table_stats(fixtures, ["match_id"], ["league", "home_team"])
-    hi = aggregates.table_stats(history, ["team", "match_id"], ["team"])
-    completion = aggregates.completion_ratio(output).collect()[0][0]
-    return {
-        "fixtures_rows": fx["n_rows"],
-        "fixtures_duplicates": fx["n_duplicates"],
-        "n_leagues": fx["n_league"],
-        "n_home_teams": fx["n_home_team"],
-        "history_rows": hi["n_rows"],
-        "n_teams": hi["n_team"],
-        "output_completion": float(completion) if completion is not None else None,
-    }
+    """The run-summary stats dict (pipeline.py:103-118) — one job for
+    all three tables: each is reduced to a one-row aggregate, the three
+    rows are cross-joined and collected once, so their stages run
+    side by side instead of one collect after another."""
+    fx = fixtures.agg(
+        F.count("*").alias("fixtures_rows"),
+        (F.count("*") - F.count_distinct("match_id")).alias("fixtures_duplicates"),
+        F.count_distinct("league").alias("n_leagues"),
+        F.count_distinct("home_team").alias("n_home_teams"),
+    )
+    hi = history.agg(
+        F.count("*").alias("history_rows"),
+        F.count_distinct("team").alias("n_teams"),
+    )
+    completion = aggregates.completion_ratio(output).withColumnRenamed(
+        "completion", "output_completion"
+    )
+    return fx.crossJoin(hi).crossJoin(completion).collect()[0].asDict()

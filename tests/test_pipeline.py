@@ -7,10 +7,19 @@ from __future__ import annotations
 
 import datetime
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from football_etl_spark.io import sinks
 from football_etl_spark.plans import pipeline
+
+FIXTURES_DDL = (
+    "match_id string, date string, home_team string, away_team string, "
+    "league string, country string, kickoff_time string, status string, "
+    "competition_stage string"
+)
+
 
 def TODAY():
     return F.lit("2025-05-15").cast("date")
@@ -26,12 +35,7 @@ def fixtures_df(spark):
         ("3", "2025-05-01", "Arsenal", "Chelsea", "Premier League", "England", "12:30", "Ended", "35"),  # past
         ("4", "21/05/2025", "Wolves", "Newcastle", "Premier League", "England", "17:00", "Scheduled", "37"),
     ]
-    return spark.createDataFrame(
-        rows,
-        "match_id string, date string, home_team string, away_team string, "
-        "league string, country string, kickoff_time string, status string, "
-        "competition_stage string",
-    )
+    return spark.createDataFrame(rows, FIXTURES_DDL)
 
 
 @pytest.fixture(scope="module")
@@ -102,10 +106,32 @@ def test_join_data_wide_output(spark, fixtures_df, history_df):
     # teams without history stay present with null metrics (left join)
     assert rows["4"]["home_win_ratio"] is None
 
+    # pipeline_stats' single job equals separate plain aggregates
+    def n_distinct(df, col):
+        return df.select(F.count_distinct(col)).first()[0]
+
+    out_rows = wide.collect()
+    densities = [
+        sum(r[c] is not None for r in out_rows) / len(out_rows) for c in wide.columns
+    ]
+    expected = {
+        "fixtures_rows": fx.count(),
+        "fixtures_duplicates": fx.count() - n_distinct(fx, "match_id"),
+        "n_leagues": n_distinct(fx, "league"),
+        "n_home_teams": n_distinct(fx, "home_team"),
+        "history_rows": hist.count(),
+        "n_teams": n_distinct(hist, "team"),
+        "output_completion": sum(densities) / len(densities),
+    }
     stats = pipeline.pipeline_stats(fx, hist, wide)
+    assert list(stats) == list(expected)
+    completion = stats.pop("output_completion")
+    assert completion == pytest.approx(expected.pop("output_completion"), rel=1e-12)
+    assert stats == expected
+    assert all(type(v) is int for v in stats.values())
     assert stats["fixtures_duplicates"] == 0
     assert stats["n_teams"] == 4
-    assert 0.0 <= stats["output_completion"] <= 1.0
+    assert 0.0 <= completion <= 1.0
 
 
 def test_join_data_faithful_fanout(spark, fixtures_df, history_df):
@@ -117,3 +143,55 @@ def test_join_data_faithful_fanout(spark, fixtures_df, history_df):
     wide_mn = pipeline.join_data(fx, metrics, asof=False)
     assert wide_asof.count() == fx.count()
     assert wide_mn.count() > wide_asof.count()
+
+
+@pytest.mark.parametrize("asof", [True, False])
+def test_join_data_is_materialized(spark, tmp_path, fixtures_df, history_df, asof):
+    """join_data's output is checkpointed: its executed plan scans no
+    file and shuffles nothing, and its logical plan is one RDD leaf —
+    the sinks and stats read blocks instead of re-running the DAG."""
+    src = str(tmp_path / "fixtures.parquet")
+    fixtures_df.write.parquet(src)
+    fx = pipeline.process_fixtures(spark.read.parquet(src), today=TODAY())
+    hist = pipeline.process_team_history(history_df, today=TODAY())
+    wide = pipeline.join_data(fx, pipeline.calculate_team_metrics(hist), asof=asof)
+    # the lazy form of the same frame does scan and shuffle
+    lazy_plan = fx._jdf.queryExecution().executedPlan().toString()
+    assert "FileScan" in lazy_plan and "Exchange" in lazy_plan
+
+    qe = wide._jdf.queryExecution()
+    plan = qe.executedPlan().toString()
+    assert "FileScan" not in plan and "Exchange" not in plan, plan
+    analyzed = qe.analyzed()
+    assert analyzed.nodeName() == "LogicalRDD" and analyzed.children().isEmpty()
+
+
+def test_join_data_parquet_reads_back_in_date_order(spark, tmp_path, history_df):
+    """The checkpoint keeps the final range sort: part files, read in
+    partition order, hold non-decreasing dates."""
+    teams = ["Fulham", "Everton", "Man United", "Spurs", "Wolves", "Arsenal"]
+    start = datetime.date(2025, 5, 16)
+    rows = [
+        (str(i), (start + datetime.timedelta(days=(i * 37) % 90)).isoformat(),
+         teams[i % 6], teams[(i + 1) % 6], "Premier League", "England",
+         f"{12 + i % 9}:00", "Scheduled", "38")
+        for i in range(240)
+    ]
+    raw = spark.createDataFrame(rows, FIXTURES_DDL).repartition(8)
+    fx = pipeline.process_fixtures(raw, today=TODAY())
+    hist = pipeline.process_team_history(history_df, today=TODAY())
+    out = tmp_path / "football_data.parquet"
+    # keep the range sort's partitions apart so the order spans files
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        wide = pipeline.join_data(fx, pipeline.calculate_team_metrics(hist))
+        sinks.write_parquet(wide, str(out))
+    finally:
+        spark.conf.set(key, old)
+
+    parts = sorted(out.glob("part-*.parquet"))
+    dates = [d for p in parts for d in pq.read_table(p, columns=["date"])["date"].to_pylist()]
+    assert len(parts) > 1 and len(dates) == 240
+    assert dates == sorted(dates)
