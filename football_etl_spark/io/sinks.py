@@ -215,7 +215,14 @@ def compact_parquet(
     and object-store/table-format deployments replace the renames
     with a manifest/transaction commit that closes the gap entirely.
 
-    ``partition_by`` preserves a partitioned layout (e.g. the bronze
+    A streaming file sink's output (the bronze table of
+    ``streaming.incremental.incremental_parquet_sink``) is read
+    through its ``_spark_metadata`` log. The compacted directory is
+    plain parquet with no such log, so compact it only once the
+    stream that writes it is retired: a restarted stream would start
+    a new log that hides the compacted files from readers.
+
+    ``partition_by`` preserves a partitioned layout (e.g. the fanout
     sink's ``batch_id=N`` dirs): discovered partition columns are
     re-written as directories instead of silently demoted to data
     columns. The repartition then keys on the partition columns, so

@@ -6764,9 +6764,10 @@ def _fresh_tmp_root(spark: SparkSession, tag: str, sf_dir: str) -> str:
     "daily_match_scraper.py:587-628): events written to a multi-file "
     "parquet feed, re-read as a FILE-SOURCE STREAM "
     "(maxFilesPerTrigger=1 → one micro-batch per file), landed in a "
-    "batch_id-partitioned bronze table via foreachBatch + idempotent "
-    "batch-scoped overwrite (streaming/incremental.incremental_"
-    "parquet_sink), then the landed table is returned. Hash-equality "
+    "bronze table by Spark's parquet file sink, exactly-once through "
+    "the checkpoint and the sink's _spark_metadata log (streaming/"
+    "incremental.incremental_parquet_sink), then the landed table is "
+    "returned through that log. Hash-equality "
     "against the plain source SELECT proves the whole checkpointed "
     "micro-batch path is lossless and exactly-once — the previously "
     "pytest-only streaming surface under the driver's hard gate",

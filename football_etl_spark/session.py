@@ -11,6 +11,18 @@ The engine pins the handful of configs that its semantics rely on
   DuckDB's UTC-naive timestamps.
 - AQE on — runtime partition coalescing + skew-join handling is the
   scale story for skewed keys (big leagues / hot customers).
+- On a local master, streaming checkpoints go through
+  ``FileSystemBasedCheckpointFileManager``. Without the native
+  libhadoop, Hadoop's local file system forks a ``readlink`` process
+  for every FileContext rename (about 8 per offset, commit or source
+  log file) and a ``chmod`` process for every file it creates. The
+  FileSystem-based manager renames with ``File.renameTo``, one atomic
+  rename(2) on a local disk, so each micro-batch's three log writes
+  fork nothing. The trade-off: FileContext's rename refuses to
+  overwrite, so it keeps two drivers writing one checkpoint at once
+  from both committing the same batch. Two concurrent drivers on one
+  checkpoint are unsupported either way. An ``extra_conf`` value for
+  the key wins.
 """
 
 from __future__ import annotations
@@ -142,13 +154,20 @@ def get_spark(
     the worker's path), with the package's parent directory appended
     to the workers' ``PYTHONPATH`` so the daemon imports from any cwd.
     Other masters keep the stock daemon: their executors may not have
-    the package.
+    the package. Local masters also take the fork-free checkpoint file
+    manager of the module docstring; other masters keep Spark's
+    default.
     """
     cpus = default_parallelism()
     master = master or f"local[{cpus}]"
     conf = dict(extra_conf or {})
     if master == "local" or master.startswith("local["):
         conf.setdefault("spark.python.daemon.module", "football_etl_spark.worker_daemon")
+        conf.setdefault(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
         path = conf.get("spark.executorEnv.PYTHONPATH")
         parent = os.path.dirname(_PKG_ROOT)
         conf["spark.executorEnv.PYTHONPATH"] = f"{path}{os.pathsep}{parent}" if path else parent

@@ -4,9 +4,11 @@ The reference's ingest loop appends one file per day
 (/root/reference/daily_match_scraper.py:587-628) — a micro-batch
 pattern. Its Spark-native forms:
 
-- ``incremental_daily_job``: file-source stream +
-  ``trigger(availableNow=True)`` — catch-up batch with streaming
-  exactly-once bookkeeping (checkpointed), the engine's bronze feed.
+- ``incremental_parquet_sink``: file-source stream +
+  ``trigger(availableNow=True)`` into Spark's parquet file sink — a
+  catch-up batch, exactly-once through the checkpoint and the sink's
+  ``_spark_metadata`` log, the engine's bronze feed. No Python
+  callback runs per micro-batch.
 - ``windowed_event_counts``: watermarked sliding event-time window —
   the streaming twin of the 90-day batch range window (late data
   bounded by the watermark, state bounded by window × watermark).
@@ -263,25 +265,30 @@ def write_bronze_batch(batch_df: DataFrame, batch_id: int, out_path: str) -> Non
 
 
 def incremental_parquet_sink(stream_df: DataFrame, out_path: str, checkpoint_dir: str) -> None:
-    """Land a stream into a parquet bronze table via ``foreachBatch`` —
-    the engine's incremental LOAD stage (reference: per-day CSV appends,
-    /root/reference/daily_match_scraper.py:587-628, made exactly-once).
+    """Land a stream into a parquet bronze table with Spark's built-in
+    parquet file sink — the engine's incremental LOAD stage (reference:
+    per-day CSV appends, daily_match_scraper.py:587-628, made
+    exactly-once).
 
-    foreachBatch gets each micro-batch as a plain DataFrame plus its
-    replay-stable ``batch_id``; :func:`write_bronze_batch` keys the
-    write on that id (overwrite of a batch-scoped directory), so BOTH
-    failure modes are covered: the streaming checkpoint skips
-    fully-committed batches on restart, and a batch replayed after a
-    mid-write crash lands idempotently. ``availableNow`` makes the
-    same job a catch-up batch. At scale the sink additionally
-    partitions by ingest date inside each batch dir, and a
-    Delta/Iceberg MERGE replaces the directory-overwrite trick.
+    The file sink is exactly-once on its own: each micro-batch's files
+    are recorded under the batch id in ``out_path/_spark_metadata``.
+    A batch replayed after a crash between that log entry and the
+    checkpoint commit is skipped, because its id is already in the
+    log. A batch that crashed before its log entry re-runs, and
+    ``spark.read.parquet(out_path)`` lists files through the log, so
+    the first attempt's orphan files are never read. The layout is
+    flat: one set of part files per batch, no partition column.
+    ``availableNow`` makes the same job a catch-up batch. At scale a
+    Delta/Iceberg table takes the sink log's place.
     """
-
-    def _write(batch_df: DataFrame, batch_id: int) -> None:
-        write_bronze_batch(batch_df, batch_id, out_path)
-
-    _drain_foreach_batch(stream_df, checkpoint_dir, _write)
+    (
+        stream_df.writeStream.format("parquet")
+        .option("path", out_path)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
 
 
 def latest_silver_version(silver_path: str, below: int | None = None) -> int | None:

@@ -4,7 +4,9 @@ equivalent of the same windowed aggregation."""
 
 from __future__ import annotations
 
+import os
 import tempfile
+from types import SimpleNamespace
 
 from pyspark.sql import functions as F
 
@@ -160,7 +162,7 @@ def test_session_window_streaming_append_subset(spark):
 
 
 def test_foreach_batch_parquet_sink_exactly_once(spark):
-    """foreachBatch bronze sink: all rows land exactly once across
+    """Bronze file sink: all rows land exactly once across
     micro-batches, and a second availableNow run over the SAME
     checkpoint writes nothing new (replay protection)."""
     batch = load_table(spark, SF, "events")
@@ -178,9 +180,98 @@ def test_foreach_batch_parquet_sink_exactly_once(spark):
             )
         landed = spark.read.parquet(f"{tmp}/bronze")
         assert landed.count() == n_expected
-        # batch_id appears as a discovered partition column of the
-        # batch-scoped idempotent layout
-        assert set(landed.columns) == set(batch.columns) | {"batch_id"}
+        # the feed's columns, no partition column; the sink's own log
+        # is what readers list files through
+        assert landed.columns == schema.fieldNames()
+        assert os.path.isdir(f"{tmp}/bronze/_spark_metadata")
+
+
+def test_bronze_file_sink_skips_a_batch_replayed_after_a_lost_commit(spark):
+    """Exactly-once when the crash lands after the files are written
+    but before the checkpoint commit: with the last ``commits/N``
+    deleted, the restarted query re-runs batch N, and the sink skips
+    it because ``_spark_metadata`` already holds N."""
+    batch = load_table(spark, SF, "events")
+    n_expected = batch.count()
+
+    with tempfile.TemporaryDirectory() as tmp:
+        feed, bronze, ckpt = f"{tmp}/feed", f"{tmp}/bronze", f"{tmp}/ckpt"
+        batch.repartition(2).write.parquet(feed)
+        schema = spark.read.parquet(feed).schema
+
+        def run():
+            stream = incremental.read_event_stream(spark, feed, schema)
+            incremental.incremental_parquet_sink(stream, bronze, ckpt)
+
+        run()
+        assert spark.read.parquet(bronze).count() == n_expected
+        last = max(int(n) for n in os.listdir(f"{ckpt}/commits") if n.isdigit())
+        assert last >= 1  # two feed files, one micro-batch each
+        for name in (str(last), f".{last}.crc"):  # as if never committed
+            if os.path.exists(f"{ckpt}/commits/{name}"):
+                os.remove(f"{ckpt}/commits/{name}")
+        run()
+        assert os.path.exists(f"{ckpt}/commits/{last}")  # the batch re-ran
+        assert spark.read.parquet(bronze).count() == n_expected
+
+
+_FS_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+_FC_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileContextBasedCheckpointFileManager"
+)
+
+
+def test_local_session_writes_checkpoints_through_the_file_system(spark, tmp_path):
+    """A local ``get_spark`` session resolves the FileSystem-based
+    checkpoint manager for a local checkpoint path: its rename is one
+    rename(2), where FileContext's forks ``readlink`` without
+    libhadoop."""
+    jvm = spark.sparkContext._jvm
+    mgr = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(str(tmp_path)),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    assert mgr.getClass().getName() == _FS_MANAGER
+
+
+def test_checkpoint_manager_default_yields_to_extra_conf(monkeypatch):
+    """The checkpoint manager is a default of local masters only, and
+    an ``extra_conf`` value for the key wins over it."""
+    from football_etl_spark import session
+
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+
+    class Builder:
+        def __init__(self):
+            self.conf = {}
+
+        def appName(self, _):
+            return self
+
+        def master(self, _):
+            return self
+
+        def config(self, k, v):
+            self.conf[k] = v
+            return self
+
+        def getOrCreate(self):
+            return SimpleNamespace(
+                sparkContext=SimpleNamespace(setLogLevel=lambda _: None),
+                conf=self.conf,
+            )
+
+    def built(**kw):
+        monkeypatch.setattr(session.SparkSession, "builder", Builder())
+        return session.get_spark(**kw).conf
+
+    assert built(master="local[2]")[key] == _FS_MANAGER
+    assert built(master="local[2]", extra_conf={key: _FC_MANAGER})[key] == _FC_MANAGER
+    assert key not in built(master="spark://host:7077")
 
 
 def test_bronze_sink_mid_batch_crash_replay(spark):
